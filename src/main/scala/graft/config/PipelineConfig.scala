@@ -145,8 +145,8 @@ object PipelineConfig {
       case "csv_lines" => ErrorTolerant.csv(spark, inline, ddl)
       case "json_lines" => ErrorTolerant.json(spark, inline, ddl)
       case "text" => noCorrupt(TextSource.lines(spark, c.paths))
-      case "parquet" => noCorrupt(spark.read.options(c.options).parquet(c.paths: _*))
-      case "orc" => noCorrupt(spark.read.options(c.options).orc(c.paths: _*))
+      case "parquet" | "orc" =>
+        noCorrupt(graft.Tables.read(spark, c.`type`, c.options, c.paths))
       case "table" => noCorrupt(spark.table(c.table.getOrElse(
         sys.error("source type 'table' requires a table name"))))
       case "sql" => noCorrupt(spark.sql(c.query.getOrElse(

@@ -74,18 +74,31 @@ trait SimpleStore {
   def write(path: String, doc: String): Unit
 }
 
-/** Local/posix impl (`LocalFs` SimpleStore, `fs.rs:103-129`). */
+/** Local/posix impl (`LocalFs` SimpleStore, `fs.rs:103-129`).
+  *
+  * A write goes to a temporary file beside the document and is then renamed
+  * over it atomically, so a process killed mid-save leaves either the old
+  * document or the new one, never a truncated one. A temporary file left by
+  * such a kill never shadows the document `load` reads.
+  */
 final class LocalFsStore(root: String) extends SimpleStore {
+  import java.nio.file.{Files, StandardCopyOption}
   private val dir = java.nio.file.Paths.get(root)
-  java.nio.file.Files.createDirectories(dir)
+  Files.createDirectories(dir)
   override def load(path: String): Option[String] = {
     val p = dir.resolve(path)
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8"))
     else None
   }
-  override def write(path: String, doc: String): Unit =
-    java.nio.file.Files.write(dir.resolve(path), doc.getBytes("UTF-8"))
+  override def write(path: String, doc: String): Unit = {
+    val target = dir.resolve(path)
+    val tmp = Files.createTempFile(target.getParent, s".${target.getFileName}.", ".tmp")
+    try {
+      Files.write(tmp, doc.getBytes("UTF-8"))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
 }
 
 /** In-memory impl (the reference's Mock SimpleStore, `mock.rs:185-205`). */

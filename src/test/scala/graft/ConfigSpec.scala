@@ -686,6 +686,30 @@ class ConfigSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 1)
   }
 
+  test("parquet and orc sources see input rewritten between runs") {
+    import spark.implicits._
+    for (format <- Seq("parquet", "orc")) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_cfg_rewrite_$format").toString
+      val conf = PipelineConfig.parse(
+        s"""{ "id": "cfg_$format", "name": "rewrite", "steps": [
+           |  { "step": "copy", "kind": "stream",
+           |    "source": { "type": "$format", "paths": ["$root/in"] },
+           |    "sink": { "type": "parquet", "path": "$root/out",
+           |              "mode": "overwrite" } } ] }""".stripMargin)
+      def runOnce() = {
+        PipelineConfig.run(spark, conf, new InMemoryStore)
+        val out = spark.read.parquet(s"$root/out")
+        (out.columns.toSeq, out.orderBy("k").collect().map(_.toSeq).toSeq)
+      }
+      Seq((1, "a"), (2, "b")).toDF("k", "v").write.format(format).save(s"$root/in")
+      assert(runOnce() === (Seq("k", "v"), Seq(Seq(1, "a"), Seq(2, "b"))))
+      // new rows, k re-typed and a column added: the second run must see all of it
+      Seq((3L, "c", 0.5)).toDF("k", "v", "w").write.mode("overwrite").format(format)
+        .save(s"$root/in")
+      assert(runOnce() === (Seq("k", "v", "w"), Seq(Seq(3L, "c", 0.5))), format)
+    }
+  }
+
   test("declared gopher_gate filters and annotates with the rule suite") {
     val outF = java.nio.file.Files.createTempDirectory("graft_cfg_gq").toString + "/f"
     val outA = java.nio.file.Files.createTempDirectory("graft_cfg_gq").toString + "/a"

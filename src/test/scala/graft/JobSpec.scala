@@ -123,6 +123,62 @@ class JobSpec extends SparkSpec {
     assert(img(s"$root/out").nonEmpty)
   }
 
+  test("a crash at any state save resumes and skips exactly the committed steps") {
+    import java.nio.file.{Files, Path}
+    import scala.collection.mutable.ArrayBuffer
+    import scala.jdk.CollectionConverters._
+    val steps = Seq("decode", "ddl", "load")
+    val doc = JobState.docName("crash", "three")
+    def runJob(store: SimpleStore, ran: ArrayBuffer[String]): JobState = {
+      val r = new JobRunner("crash", "three", store)
+      r.runDecodedStream("decode", malformedDecoded(), "mock", { df => ran += "decode"; df.count() })
+      r.runCmd("ddl") { ran += "ddl" }
+      r.runDecodedStream("load", malformedDecoded(), "mock", { df => ran += "load"; df.count() })
+      r.complete()
+    }
+    def completed(s: JobState) = steps.filter(st => s.isStreamComplete(st) || s.isCommandComplete(st))
+    // the document every save of an uninterrupted run writes, in order
+    val saved = ArrayBuffer.empty[JobState]
+    runJob(new SimpleStore {
+      private val inner = new InMemoryStore
+      def load(path: String) = inner.load(path)
+      def write(path: String, d: String): Unit = { saved += JobState.fromJson(d); inner.write(path, d) }
+    }, ArrayBuffer.empty)
+    assert(completed(saved.last) === steps)
+    /** The process dies at save `crashAt`: that save leaves a half-written
+      * temp file beside the document, as a kill mid-write would, and it and
+      * every later save throw.
+      */
+    final class CrashingStore(root: Path, crashAt: Int) extends SimpleStore {
+      private val inner = new LocalFsStore(root.toString)
+      private var saves = 0
+      def load(path: String) = inner.load(path)
+      def write(path: String, d: String): Unit = {
+        saves += 1
+        if (saves == crashAt)
+          Files.write(root.resolve(s".$path.crash.tmp"), d.take(d.length / 2).getBytes("UTF-8"))
+        if (saves >= crashAt) throw new java.io.IOException(s"killed at save $saves")
+        inner.write(path, d)
+      }
+    }
+    for (k <- 1 to saved.size) {
+      val root = Files.createTempDirectory(s"graft_crash_$k")
+      intercept[java.io.IOException](runJob(new CrashingStore(root, k), ArrayBuffer.empty))
+      val committed = if (k == 1) Nil else completed(saved(k - 2))
+      val store = new LocalFsStore(root.toString)
+      // the leftover temp file does not break load: it returns the last
+      // document committed before the crash
+      assert(store.load(doc).map(d => completed(JobState.fromJson(d))).getOrElse(Nil) === committed,
+        s"crash at save $k")
+      val ran = ArrayBuffer.empty[String]
+      assert(completed(runJob(store, ran)) === steps, s"crash at save $k")
+      assert(ran === steps.filterNot(committed.contains), s"crash at save $k")
+      // the store's own saves leave no temp file behind
+      val names = Files.list(root).iterator().asScala.map(_.getFileName.toString).toSet
+      assert(names === Set(doc, s".$doc.crash.tmp"), s"crash at save $k")
+    }
+  }
+
   test("run_cmd: stop_on_error=false continues, fatal latch stops next strict step (job-command.rs)") {
     val store = new InMemoryStore
     val r = new JobRunner("j4", "cmds", store)
