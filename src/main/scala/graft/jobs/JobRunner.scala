@@ -118,7 +118,7 @@ final class JobRunner(
         None, 0, 0, Map.empty, Nil, None)))
     save()
     var stepErrors = 0L
-    try {
+    val (total, written, perFile) = try {
       // Single pass, no cache: ok/err totals (and per-file counts when the
       // frame carries a `source` lineage column) ride the sink write itself
       // as observed metrics — the pattern Transforms.copyPipeline uses. At
@@ -177,13 +177,7 @@ final class JobRunner(
       // discovered *while* writing — same as the reference's incremental
       // stream, where output produced before the budget trips exists)
       checkBudgets(step, math.max(0L, err - previouslyCharged))
-      state = state.copy(
-        curStepIndex = state.curStepIndex + 1,
-        streams = state.streams + (step -> StepStreamStatus(step,
-          state.curStepIndex, JobState.Complete, started, Some(now()),
-          ok + err, err, perFile, List(OutputStats(sinkName, written)), None)))
-      save()
-      true
+      (ok + err, written, perFile)
     } catch {
       case e: Throwable =>
         state = state.copy(
@@ -194,6 +188,15 @@ final class JobRunner(
         save()
         throw e
     }
+    // outside the try: a failed save of the Complete state propagates
+    // without latching a fatal error, so a re-run simply redoes the step
+    state = state.copy(
+      curStepIndex = state.curStepIndex + 1,
+      streams = state.streams + (step -> StepStreamStatus(step,
+        state.curStepIndex, JobState.Complete, started, Some(now()),
+        total, stepErrors, perFile, List(OutputStats(sinkName, written)), None)))
+    save()
+    true
   }
 
   /** Plain stream step: any DataFrame, no decode-error accounting. The
@@ -215,15 +218,7 @@ final class JobRunner(
     if (state.isCommandComplete(step)) return false
     abortIfFatal(stopOnError)
     val started = now()
-    try {
-      cmd
-      state = state.copy(
-        curStepIndex = state.curStepIndex + 1,
-        commands = state.commands + (step -> StepCommandStatus(step,
-          state.curStepIndex, JobState.Complete, started, Some(now()), None)))
-      save()
-      true
-    } catch {
+    try cmd catch {
       case e: Throwable =>
         state = state.copy(
           fatalError = Some(e.getMessage),
@@ -232,8 +227,15 @@ final class JobRunner(
             Some(e.getMessage))))
         save()
         if (stopOnError) throw e
-        false
+        return false
     }
+    // outside the try, as in runDecodedStreamLazy
+    state = state.copy(
+      curStepIndex = state.curStepIndex + 1,
+      commands = state.commands + (step -> StepCommandStatus(step,
+        state.curStepIndex, JobState.Complete, started, Some(now()), None)))
+    save()
+    true
   }
 
   /** Detached concurrent output (`OutputTask`, `job.rs:433-451`): the action

@@ -387,7 +387,7 @@ object TextOps {
       "pos", "fingerprint"))
     // the kernel inherits the SCAN's partitioning, deliberately: a
     // round-robin input-split fan-out was A/B'd in-session at sf0.1
-    // (tools.WinnowAb) and LOST — 0.33 s scan-partitioned vs 0.48 s
+    // (OPTIMIZATION_r18.md) and LOST — 0.33 s scan-partitioned vs 0.48 s
     // fanned out; the repartition's sort+exchange costs more than the
     // md5 pass it parallelizes. At warehouse scale input arrives
     // pre-split, so the scan's own parallelism is the right default.

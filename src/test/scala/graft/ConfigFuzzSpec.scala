@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.PipelineConfig
-import graft.config.PipelineConfig.{PipelineConf, StepConf, TransformConf}
+import graft.config.PipelineConfig.{PipelineConf, SourceConf, StepConf, TransformConf}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,8 +28,10 @@ import org.apache.spark.sql.functions._
   * could not legally write (duplicate output columns), exactly mirroring
   * the documented per-op contracts in PipelineConfig. Ops that require
   * external artifacts of a matching schema (persisted ingest indexes,
-  * media binaries, embedding columns, snapshot/drift baselines) are
-  * exercised by their own suites and stay out of the pool.
+  * media binaries, reference embeddings, snapshot/drift baselines) are
+  * exercised by their own suites and stay out of the pool; the pool plus
+  * that explicit exclusion list must equal PipelineConfig's op registry,
+  * so a new op cannot go unfuzzed by accident.
   */
 class ConfigFuzzSpec extends SparkSpec {
   import spark.implicits._
@@ -130,6 +132,8 @@ class ConfigFuzzSpec extends SparkSpec {
       Seq(tc("select", cols = Seq("doc_id", "lang", "source", "text",
         "emb")))),
     FuzzOp("repartition", MapOp, Seq(tc("repartition", expr = "8"))),
+    // drops the withColumn output when an earlier step added it
+    FuzzOp("drop", MapOp, Seq(tc("drop", cols = Seq("t_len")))),
     // text cleanup in place
     FuzzOp("normalize", MapOp, Seq(tc("normalize", cols = Seq("text")))),
     FuzzOp("html_clean", MapOp, Seq(tc("html_clean", cols = Seq("text")))),
@@ -206,6 +210,9 @@ class ConfigFuzzSpec extends SparkSpec {
     FuzzOp("perceptron_filter", FilterOp,
       Seq(tc("perceptron_filter", cols = Seq("doc_id", "text"),
         expr = "length(text) > 40", name = "filter"))),
+    FuzzOp("mmr", FilterOp,
+      Seq(tc("mmr", cols = Seq("doc_id", "emb"), expr = "length(text)",
+        name = "5"))),
     FuzzOp("k_anonymize", FilterOp, Seq(
       tc("k_anonymize", cols = Seq("lang", "source"), expr = "2",
         name = "filter"),
@@ -264,6 +271,8 @@ class ConfigFuzzSpec extends SparkSpec {
       Seq(tc("chunk", cols = Seq("text"), expr = "8,4", name = "text"))),
     // reshapes (terminal by contract — they replace the frame)
     FuzzOp("unpivot", ReshapeOp, Seq(tc("unpivot", cols = Seq("doc_id")))),
+    FuzzOp("substring_runs", ReshapeOp,
+      Seq(tc("substring_runs", cols = Seq("doc_id", "text"), expr = "6"))),
     FuzzOp("tfidf_keywords", ReshapeOp,
       Seq(tc("tfidf_keywords", cols = Seq("doc_id", "text"), expr = "3"))),
     FuzzOp("kappa", ReshapeOp,
@@ -305,6 +314,9 @@ class ConfigFuzzSpec extends SparkSpec {
     FuzzOp("chat_format", ReshapeOp,
       Seq(tc("chat_format",
         cols = Seq("doc_id", "doc_id", "source", "text")))),
+    FuzzOp("loss_mask", ReshapeOp,
+      Seq(tc("loss_mask",
+        cols = Seq("doc_id", "doc_id", "source", "text"), name = "web"))),
     FuzzOp("validate_chat", ReshapeOp,
       Seq(tc("validate_chat",
         cols = Seq("doc_id", "doc_id", "source", "text")))),
@@ -334,6 +346,28 @@ class ConfigFuzzSpec extends SparkSpec {
     FuzzOp("train_centroids", ReshapeOp,
       Seq(tc("train_centroids", cols = Seq("doc_id", "emb"),
         expr = "4,2"))))
+
+  test("the pool covers every registered op but the listed exclusions") {
+    val excluded = Set(
+      // media binaries
+      "dedup_image", "dedup_audio", "dedup_video", "image_gate",
+      "audio_gate", "video_gate", "decontaminate_image",
+      // persisted ingest indexes and loop state
+      "tfidf_indexed", "span_clean_indexed", "substring_dedup_indexed",
+      "para_clean_indexed", "dsir_retro_score", "bitext_retro_mine",
+      "term_df_forget", "span_df_forget", "para_df_forget",
+      "bm25_df_forget", "ltf_forget", "substring_index_recompute",
+      "near_dup_recompute",
+      // snapshot and drift baselines
+      "snapshot_diff", "drift",
+      // a reference-embedding or target-side embedding parquet
+      "decontaminate_sem", "bitext_mine",
+      // requires a balanced panel, which upstream filters break (see pool)
+      "fleiss")
+    val pooled = pool.flatMap(_.variants.map(_.op)).toSet
+    assert((pooled intersect excluded).isEmpty)
+    assert(pooled ++ excluded === PipelineConfig.transformOps)
+  }
 
   test("100 seeded declarative pipelines: compose, round-trip, " +
       "invariants, deterministic replay") {
@@ -391,7 +425,9 @@ class ConfigFuzzSpec extends SparkSpec {
       }
       // declared-surface round trip: the JSON a config file would carry
       val pc = PipelineConf(id = s"fz$i", name = "fuzz",
-        steps = Seq(StepConf(step = "s", transforms = confs)))
+        steps = Seq(StepConf(step = "s",
+          source = Some(SourceConf("parquet", paths = Seq(fixtureDir))),
+          transforms = confs)))
       val parsed = PipelineConfig.parse(PipelineConfig.toJson(pc))
       assert(parsed === pc, s"pipeline $i: JSON round-trip drift")
       val (cols1, rows1) = canon(df)

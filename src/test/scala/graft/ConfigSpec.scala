@@ -2138,14 +2138,103 @@ class ConfigSpec extends SparkSpec {
         srcDf, tgtDf, "id", "v", pqLists(srcDf, tgtDf),
         pqLists(tgtDf, srcDf), k = 2, marginThresholdMicro = 1020000L)))
     // the unknown-source red case fails loudly, not silently all-pairs
-    val bad = PipelineConfig.parse(PipelineConfig.toJson(conf)
-      .replace("ivf:2:2", "bogus").replace(s"$base/out", s"$base/out_bad"))
     val e = intercept[Exception] {
-      PipelineConfig.run(spark, bad, new InMemoryStore)
+      PipelineConfig.parse(PipelineConfig.toJson(conf)
+        .replace("ivf:2:2", "bogus").replace(s"$base/out", s"$base/out_bad"))
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
     assert(msgs(e).exists(m => m != null && m.contains("candidateSource")),
       e.toString)
+  }
+
+  test("parse rejects every class of config error, naming the step and the op or type") {
+    import PipelineConfig._
+    val src = SourceConf("json_lines", schema = Some("id STRING, text STRING"))
+    val sink = SinkConf("parquet", path = Some("/nonexistent/out"))
+    def stream(ts: TransformConf*) =
+      StepConf("bad", source = Some(src), transforms = ts, sink = Some(sink))
+    val loopSink = SinkConf("parquet", path = Some("/nonexistent/clean"),
+      options = Map("index" -> "/nonexistent/index", "checkpoint" -> "/nonexistent/ckpt"))
+    def ingest(t: TransformConf, sk: SinkConf = loopSink) = StepConf("bad", kind = "ingest",
+      source = Some(SourceConf("json", paths = Seq("/nonexistent/in"),
+        schema = Some("doc_id BIGINT, text STRING"))),
+      transforms = Seq(t), sink = Some(sk))
+    val textCols = Seq("id", "text")
+    // (error class, the bad step, what the message must name besides the step)
+    val cases = Seq(
+      ("unknown step kind", StepConf("bad", kind = "streem"), "streem"),
+      ("unknown source type", stream().copy(source = Some(src.copy(`type` = "jsonl"))), "jsonl"),
+      ("unknown sink type", stream().copy(sink = Some(sink.copy(`type` = "delta"))), "delta"),
+      ("unknown transform op", stream(TransformConf("dedupe_exact", cols = textCols)), "dedupe_exact"),
+      ("unknown ingest op", ingest(TransformConf("near_dup_ingets", cols = Seq("doc_id", "text"))),
+        "near_dup_ingets"),
+      ("wrong cols arity", stream(TransformConf("dedup_exact", cols = Seq("id"))), "dedup_exact"),
+      ("missing expr", stream(TransformConf("filter")), "filter"),
+      ("missing name", stream(TransformConf("oov_rate", cols = textCols)), "oov_rate"),
+      ("missing schema", stream().copy(source = Some(src.copy(schema = None))), "json_lines"),
+      ("missing sql", StepConf("bad", kind = "command"), "command"),
+      ("missing path", stream().copy(sink = Some(sink.copy(path = None))), "parquet"),
+      ("non-numeric param", stream(TransformConf("dedup_winnow", cols = textCols,
+        expr = Some("5,four,2"))), "dedup_winnow"),
+      ("bad sink mode", stream().copy(sink = Some(sink.copy(mode = "upsert"))), "upsert"),
+      ("bad op mode", stream(TransformConf("gopher_gate", cols = textCols, name = Some("drop"))),
+        "gopher_gate"),
+      ("bad bitext_mine candidate source", stream(TransformConf("bitext_mine", cols = Seq("id", "v"),
+        name = Some("/nonexistent/tgt"), expr = Some("2,1000000,hnsw"))), "candidateSource"),
+      ("ingest without options.index", ingest(TransformConf("near_dup_ingest",
+        cols = Seq("doc_id", "text")), loopSink.copy(options = loopSink.options - "index")),
+        "options.index"))
+    for ((what, step, named) <- cases) {
+      val conf = PipelineConf("v", "validate", steps = Seq(
+        StepConf("ok", kind = "command", sql = Some("SELECT 1")), step))
+      val e = intercept[IllegalArgumentException](parse(toJson(conf)))
+      assert(e.getMessage.contains("step 'bad'") && e.getMessage.contains(named),
+        s"$what: ${e.getMessage}")
+    }
+  }
+
+  test("sink mode accepts every spelling DataFrameWriter.mode(String) does") {
+    import PipelineConfig._
+    val df = spark.range(3).toDF("id")
+    val root = java.nio.file.Files.createTempDirectory("graft_cfg_modes").toString
+    // each mode: a first write to a fresh path, then a second to the same
+    // path, which leaves `n` rows or fails (None) because the path exists
+    val second = Map("overwrite" -> Some(3L), "Overwrite" -> Some(3L),
+      "append" -> Some(6L), "APPEND" -> Some(6L), "ignore" -> Some(3L),
+      "IGNORE" -> Some(3L), "error" -> None, "errorifexists" -> None,
+      "ErrorIfExists" -> None, "default" -> None)
+    def sinkFor(m: String) = SinkConf("parquet", path = Some(s"$root/$m"), mode = m)
+    for (m <- second.keys) {
+      parse(toJson(PipelineConf("m", "modes", steps = Seq(StepConf("w",
+        source = Some(SourceConf("sql", query = Some("SELECT 1 AS id"))), sink = Some(sinkFor(m)))))))
+      assert(buildSink(sinkFor(m))(df) === 3L, m)
+    }
+    for ((m, n) <- second) n match {
+      case Some(rows) =>
+        buildSink(sinkFor(m))(df)
+        assert(spark.read.parquet(s"$root/$m").count() === rows, m)
+      case None =>
+        intercept[org.apache.spark.sql.AnalysisException](buildSink(sinkFor(m))(df))
+    }
+    val e = intercept[IllegalArgumentException](parse(toJson(PipelineConf("m", "modes",
+      steps = Seq(StepConf("w", source = Some(SourceConf("sql", query = Some("SELECT 1"))),
+        sink = Some(SinkConf("parquet", path = Some(s"$root/bogus"), mode = "bogus"))))))))
+    assert(e.getMessage.contains("step 'w'") && e.getMessage.contains("bogus"), e.getMessage)
+  }
+
+  test("run binds every step before the first one executes") {
+    import PipelineConfig._
+    val out = java.nio.file.Files.createTempDirectory("graft_cfg_early").resolve("out")
+    val conf = PipelineConf("early", "fail", steps = Seq(
+      StepConf("write", source = Some(SourceConf("json_lines", schema = Some("id STRING"),
+        lines = Seq("""{"id":"1"}"""))), sink = Some(SinkConf("parquet", path = Some(out.toString)))),
+      StepConf("typo", source = Some(SourceConf("sql", query = Some("SELECT 1 AS id"))),
+        transforms = Seq(TransformConf("filtr", expr = Some("id > 0"))))))
+    val store = new InMemoryStore
+    val e = intercept[IllegalArgumentException](PipelineConfig.run(spark, conf, store))
+    assert(e.getMessage.contains("step 'typo'") && e.getMessage.contains("filtr"), e.getMessage)
+    assert(store.load(JobState.docName("early", "fail")).isEmpty)
+    assert(!java.nio.file.Files.exists(out))
   }
 }

@@ -179,6 +179,40 @@ class JobSpec extends SparkSpec {
     }
   }
 
+  test("a transient failure of a step's Complete save propagates without latching a fatal error") {
+    /** Fails its `failAt`-th write once, as a transient store error would. */
+    final class FlakyStore(failAt: Int) extends SimpleStore {
+      private val inner = new InMemoryStore
+      private var writes = 0
+      def load(path: String) = inner.load(path)
+      def write(path: String, d: String): Unit = {
+        writes += 1
+        if (writes == failAt) throw new java.io.IOException(s"transient failure of write $writes")
+        inner.write(path, d)
+      }
+    }
+    // a command step saves once, on completion
+    val cmdStore = new FlakyStore(1)
+    var ran = 0
+    intercept[java.io.IOException](new JobRunner("flaky", "cmd", cmdStore).runCmd("a") { ran += 1 })
+    val r1 = new JobRunner("flaky", "cmd", cmdStore)
+    assert(r1.runCmd("a") { ran += 1 })
+    assert(ran === 2)
+    assert(r1.currentState.commands("a").status === JobState.Complete)
+    assert(r1.currentState.fatalError.isEmpty)
+    // a stream step saves InProgress, then Complete
+    val streamStore = new FlakyStore(2)
+    intercept[java.io.IOException](new JobRunner("flaky", "stream", streamStore)
+      .runDecodedStream("s", malformedDecoded(), "mock", _.count()))
+    val r2 = new JobRunner("flaky", "stream", streamStore)
+    assert(r2.runDecodedStream("s", malformedDecoded(), "mock", _.count()))
+    val st = r2.currentState.streams("s")
+    assert(st.status === JobState.Complete && st.totalLinesScanned === 5 && st.numErrors === 2)
+    assert(r2.currentState.fatalError.isEmpty)
+    assert(JobState.fromJson(streamStore.load(JobState.docName("flaky", "stream")).get)
+      .fatalError.isEmpty)
+  }
+
   test("run_cmd: stop_on_error=false continues, fatal latch stops next strict step (job-command.rs)") {
     val store = new InMemoryStore
     val r = new JobRunner("j4", "cmds", store)
