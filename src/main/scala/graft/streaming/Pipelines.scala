@@ -1,8 +1,10 @@
 package graft.streaming
 
-import graft.llm.TextOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.llm.{Dedup, TextOps}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Composed end-to-end pipelines — the "switch from the reference" story in
@@ -75,54 +77,15 @@ object Pipelines {
   def nearDupIngest(stream: DataFrame, idCol: String, textCol: String,
       corpusDir: String, indexDir: String, checkpointDir: String,
       shingleN: Int = 3, numHashes: Int = 96, bands: Int = 48,
-      threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.llm.Dedup
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch.select(col(idCol), col(textCol)).localCheckpoint()
-        if (!fresh.isEmpty) {
-          val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-          val haveIndex = idxPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(idxPath) // any Hadoop FS scheme, not just local files
-          val (corpus, index) =
-            if (haveIndex)
-              // exclude this batch's own partitions: a retry must dedup
-              // against the PRIOR state, not its failed attempt's output
-              (spark.read.parquet(corpusDir)
-                 .where(col("batch") =!= batchId)
-                 .select(col(idCol), col(textCol)),
-                spark.read.parquet(indexDir)
-                  .where(col("batch") =!= batchId)
-                  .select(col("id"), col("band"), col("bucket")))
-            else {
-              import spark.implicits._
-              (Seq.empty[(Long, String)].toDF(idCol, textCol),
-                Seq.empty[(Long, Int, Long)].toDF("id", "band", "bucket"))
-            }
-          val (pairs, freshBands) = Dedup.minhashNearDupsIncrementalWithBands(
-            corpus, index, fresh, idCol, textCol, shingleN, numHashes, bands,
-            threshold)
-          val losers = Dedup.survivorAssignment(pairs)
-            .where(col("id") =!= col("survivor_id"))
-            .select(col("id"))
-          val kept = fresh.join(losers,
-            fresh(idCol).cast("long") === losers("id"), "left_anti")
-            .localCheckpoint()
-          kept.write.mode("overwrite")
-            .parquet(s"$corpusDir/batch=$batchId")
-          // survivors' bands, straight from the kernel output this batch
-          // already computed — no re-shingle
-          freshBands.join(kept.select(col(idCol).cast("long").as("id")),
-              Seq("id"), "left_semi")
-            .write.mode("overwrite")
-            .parquet(s"$indexDir/batch=$batchId")
-        }
-      }
-      .start()
-  }
+      threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
+    survivorIngest(stream, idCol, Seq(idCol, textCol), corpusDir, indexDir,
+        checkpointDir) { (fresh, prior) =>
+      // survivors' bands come straight from the kernel — no re-shingle
+      Dedup.minhashNearDupsIncrementalWithBands(
+        prior(corpusDir, s"`$idCol` BIGINT, `$textCol` STRING"),
+        prior(indexDir, "id BIGINT, band INT, bucket BIGINT"), fresh, idCol,
+        textCol, shingleN, numHashes, bands, threshold)
+    }
 
   /** Continuous GUARANTEED-RECALL near-dup-deduplicated ingestion: the
     * winnow counterpart of [[nearDupIngest]] — each batch is deduplicated
@@ -141,45 +104,13 @@ object Pipelines {
   def winnowIngest(stream: DataFrame, idCol: String, textCol: String,
       corpusDir: String, indexDir: String, checkpointDir: String,
       k: Int = 5, w: Int = 4, minShared: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.llm.Dedup
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch.select(col(idCol), col(textCol)).localCheckpoint()
-        if (!fresh.isEmpty) {
-          val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-          val haveIndex = idxPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(idxPath)
-          val index =
-            if (haveIndex)
-              spark.read.parquet(indexDir)
-                .where(col("batch") =!= batchId) // retry sees PRIOR state
-                .select(col("id"), col("fingerprint"))
-            else {
-              import spark.implicits._
-              Seq.empty[(Long, Long)].toDF("id", "fingerprint")
-            }
-          val (pairs, freshFp) = Dedup.winnowNearDupsIncremental(
-            index, fresh, idCol, textCol, k, w, minShared)
-          val losers = Dedup.survivorAssignment(pairs)
-            .where(col("id") =!= col("survivor_id"))
-            .select(col("id"))
-          val kept = fresh.join(losers,
-            fresh(idCol).cast("long") === losers("id"), "left_anti")
-            .localCheckpoint()
-          kept.write.mode("overwrite")
-            .parquet(s"$corpusDir/batch=$batchId")
-          freshFp.join(kept.select(col(idCol).cast("long").as("id")),
-              Seq("id"), "left_semi")
-            .write.mode("overwrite")
-            .parquet(s"$indexDir/batch=$batchId")
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    survivorIngest(stream, idCol, Seq(idCol, textCol), corpusDir, indexDir,
+        checkpointDir) { (fresh, prior) =>
+      Dedup.winnowNearDupsIncremental(
+        prior(indexDir, "id BIGINT, fingerprint BIGINT"), fresh, idCol,
+        textCol, k, w, minShared)
+    }
 
   /** Continuous image near-dedup over a binary media column: each
     * micro-batch hashes its images ([[graft.llm.ImageHash]], map-only),
@@ -225,51 +156,18 @@ object Pipelines {
   def videoDedupIngest(stream: DataFrame, idCol: String, binCol: String,
       corpusDir: String, indexDir: String, checkpointDir: String,
       minShareMilli: Long = 500L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.llm.{Dedup, VideoHash}
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch.localCheckpoint()
-        if (!fresh.isEmpty) {
-          val sets = VideoHash.videoHashes(fresh, idCol, binCol).toDF()
-            .filter(col("decoded"))
-            .select(col("id"),
-              array_sort(array_distinct(col("frame_hashes"))).as("hs"))
-            .localCheckpoint()
-          val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-          val haveIndex = idxPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(idxPath)
-          val index =
-            if (haveIndex)
-              spark.read.parquet(indexDir)
-                .where(col("batch") =!= batchId) // retry sees PRIOR state
-                .select(col("id"), col("h"))
-            else {
-              import spark.implicits._
-              Seq.empty[(Long, Long)].toDF("id", "h")
-            }
-          val pairs = VideoHash.nearDupPairsIncremental(sets, index,
-            minShareMilli)
-          val losers = Dedup.survivorAssignment(pairs)
-            .where(col("id") =!= col("survivor_id"))
-            .select(col("id"))
-          val kept = fresh.join(losers,
-            fresh(idCol).cast("long") === losers("id"), "left_anti")
-            .localCheckpoint()
-          kept.write.mode("overwrite")
-            .parquet(s"$corpusDir/batch=$batchId")
-          sets.join(kept.select(col(idCol).cast("long").as("id")),
-              Seq("id"), "left_semi")
-            .select(col("id"), explode(col("hs")).as("h"))
-            .write.mode("overwrite")
-            .parquet(s"$indexDir/batch=$batchId")
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    survivorIngest(stream, idCol, Nil, corpusDir, indexDir,
+        checkpointDir) { (fresh, prior) =>
+      val sets = graft.llm.VideoHash.videoHashes(fresh, idCol, binCol).toDF()
+        .filter(col("decoded"))
+        .select(col("id"),
+          array_sort(array_distinct(col("frame_hashes"))).as("hs"))
+        .localCheckpoint()
+      (graft.llm.VideoHash.nearDupPairsIncremental(sets,
+          prior(indexDir, "id BIGINT, h BIGINT"), minShareMilli),
+        sets.select(col("id"), explode(col("hs")).as("h")))
+    }
 
   /** Continuous fuzzy (edit-distance) dedup over a short key column: each
     * micro-batch pairs against itself and the persisted (id, key) index
@@ -284,49 +182,17 @@ object Pipelines {
     */
   def fuzzyDedupIngest(stream: DataFrame, idCol: String, keyCol: String,
       corpusDir: String, indexDir: String, checkpointDir: String,
-      maxDist: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.llm.Dedup
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch.localCheckpoint()
-        if (!fresh.isEmpty) {
-          val freshKeys = fresh
-            .select(col(idCol).cast("long").as("id"),
-              col(keyCol).cast("string").as("key"))
-            .localCheckpoint()
-          val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-          val haveIndex = idxPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(idxPath)
-          val index =
-            if (haveIndex)
-              spark.read.parquet(indexDir)
-                .where(col("batch") =!= batchId) // retry sees PRIOR state
-                .select(col("id"), col("key"))
-            else {
-              import spark.implicits._
-              Seq.empty[(Long, String)].toDF("id", "key")
-            }
-          val pairs = Dedup.fuzzyNearDupPairsIncremental(freshKeys, index,
-            "id", "key", maxDist)
-          val losers = Dedup.survivorAssignment(pairs)
-            .where(col("id") =!= col("survivor_id"))
-            .select(col("id"))
-          val kept = fresh.join(losers,
-            fresh(idCol).cast("long") === losers("id"), "left_anti")
-            .localCheckpoint()
-          kept.write.mode("overwrite")
-            .parquet(s"$corpusDir/batch=$batchId")
-          freshKeys.join(kept.select(col(idCol).cast("long").as("id")),
-              Seq("id"), "left_semi")
-            .write.mode("overwrite")
-            .parquet(s"$indexDir/batch=$batchId")
-        }
-      }
-      .start()
-  }
+      maxDist: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
+    survivorIngest(stream, idCol, Nil, corpusDir, indexDir,
+        checkpointDir) { (fresh, prior) =>
+      val freshKeys = fresh
+        .select(col(idCol).cast("long").as("id"),
+          col(keyCol).cast("string").as("key"))
+        .localCheckpoint()
+      (Dedup.fuzzyNearDupPairsIncremental(freshKeys,
+        prior(indexDir, "id BIGINT, key STRING"), "id", "key", maxDist),
+        freshKeys)
+    }
 
   /** Continuous Count-Min maintenance: each micro-batch writes ITS OWN
     * delta sketch to `batch=<id>` — no state is read back, because the
@@ -340,15 +206,8 @@ object Pipelines {
   def cmsIngest(stream: DataFrame, textCol: String, sketchDir: String,
       checkpointDir: String, depth: Int = 4, width: Int = 256)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          graft.llm.CorpusStats.countMinSketch(batch.toDF(), textCol,
-            depth, width)
-            .write.mode("overwrite").parquet(s"$sketchDir/batch=$id")
-      }
-      .start()
+    deltaIngest(stream, checkpointDir)(b => Seq(sketchDir ->
+      graft.llm.CorpusStats.countMinSketch(b, textCol, depth, width)))
 
   /** The merged cell view over a [[cmsIngest]] directory: cell-wise sum
     * across batch deltas = the sketch of everything ingested. */
@@ -366,15 +225,8 @@ object Pipelines {
   def hllIngest(stream: DataFrame, groupCol: String, valueCol: String,
       regDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          graft.llm.Sketches.hllRegisters(batch.toDF(), groupCol,
-            col(valueCol))
-            .write.mode("overwrite").parquet(s"$regDir/batch=$id")
-      }
-      .start()
+    deltaIngest(stream, checkpointDir)(b => Seq(regDir ->
+      graft.llm.Sketches.hllRegisters(b, groupCol, col(valueCol))))
 
   /** The merged register view over a [[hllIngest]] directory. */
   def hllRegistersRead(spark: SparkSession, groupCol: String,
@@ -394,14 +246,8 @@ object Pipelines {
   def btIngest(stream: DataFrame, winnerCol: String, loserCol: String,
       pairDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          graft.llm.Ranking.btPairCounts(batch.toDF(), winnerCol, loserCol)
-            .write.mode("overwrite").parquet(s"$pairDir/batch=$id")
-      }
-      .start()
+    deltaIngest(stream, checkpointDir)(b => Seq(pairDir ->
+      graft.llm.Ranking.btPairCounts(b, winnerCol, loserCol)))
 
   /** The merged pair-count view over a [[btIngest]] directory. */
   def btPairCountsRead(spark: SparkSession, pairDir: String): DataFrame =
@@ -420,15 +266,8 @@ object Pipelines {
   def manifestIngest(stream: DataFrame, shardCol: String, idCol: String,
       textCol: String, manifestDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          graft.llm.CorpusStats.shardManifest(batch.toDF(), shardCol,
-            idCol, textCol)
-            .write.mode("overwrite").parquet(s"$manifestDir/batch=$id")
-      }
-      .start()
+    deltaIngest(stream, checkpointDir)(b => Seq(manifestDir ->
+      graft.llm.CorpusStats.shardManifest(b, shardCol, idCol, textCol)))
 
   /** The merged manifest view over a [[manifestIngest]] directory. */
   def manifestRead(spark: SparkSession, shardCol: String,
@@ -452,19 +291,12 @@ object Pipelines {
   def agreementIngest(stream: DataFrame, itemCol: String, labelCol: String,
       cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .filter(col(labelCol).isNotNull)
-            .select(col(itemCol).cast("string").as("item"),
-              col(labelCol).cast("string").as("label"))
-            .groupBy(col("item"), col("label"))
-            .agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$cellsDir/batch=$id")
-      }
-      .start()
+    deltaIngest(stream, checkpointDir)(b => Seq(cellsDir -> b
+      .filter(col(labelCol).isNotNull)
+      .select(col(itemCol).cast("string").as("item"),
+        col(labelCol).cast("string").as("label"))
+      .groupBy(col("item"), col("label"))
+      .agg(count(lit(1)).as("n"))))
 
   /** The merged (item, label, n) cell view over an [[agreementIngest]]
     * directory.
@@ -488,17 +320,11 @@ object Pipelines {
       rowsDir: String, countsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(quasiCols.nonEmpty, "need at least one quasi-identifier column")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.toDF().localCheckpoint()
-          b.write.mode("overwrite").parquet(s"$rowsDir/batch=$id")
-          b.groupBy(quasiCols.map(col): _*).agg(count(lit(1)).as("qn"))
-            .write.mode("overwrite").parquet(s"$countsDir/batch=$id")
-        }
-      }
-      .start()
+    deltaIngest(stream, checkpointDir) { batch =>
+      val b = batch.localCheckpoint()
+      Seq(rowsDir -> b, countsDir ->
+        b.groupBy(quasiCols.map(col): _*).agg(count(lit(1)).as("qn")))
+    }
   }
 
   /** The released view over a [[suppressIngest]] pair of directories:
@@ -530,15 +356,8 @@ object Pipelines {
   def genLadderIngest(stream: DataFrame, quasiCols: Seq[String],
       numCol: String, histDir: String, checkpointDir: String,
       maxExp: Int = 24): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty)
-          graft.llm.Privacy.genLadderHist(batch.toDF(), quasiCols, numCol,
-              maxExp)
-            .write.mode("overwrite").parquet(s"$histDir/batch=$id")
-      }
-      .start()
+    deltaIngest(stream, checkpointDir)(b => Seq(histDir ->
+      graft.llm.Privacy.genLadderHist(b, quasiCols, numCol, maxExp)))
 
   /** The release width picked from a [[genLadderIngest]] directory's
     * merged histogram.
@@ -551,47 +370,14 @@ object Pipelines {
   private def mediaDedupIngest(stream: DataFrame, idCol: String,
       binCol: String, corpusDir: String, indexDir: String,
       checkpointDir: String, maxHamming: Int,
-      hashFn: (DataFrame, String, String) => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.llm.Dedup
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch.select(col(idCol), col(binCol)).localCheckpoint()
-        if (!fresh.isEmpty) {
-          // hash ONCE per batch; only these slim rows are ever persisted
-          val freshFp = hashFn(fresh, idCol, binCol).localCheckpoint()
-          val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-          val haveIndex = idxPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(idxPath)
-          val index =
-            if (haveIndex)
-              spark.read.parquet(indexDir)
-                .where(col("batch") =!= batchId) // retry sees PRIOR state
-                .select(col("id"), col("fp"))
-            else {
-              import spark.implicits._
-              Seq.empty[(Long, Long)].toDF("id", "fp")
-            }
-          val pairs = Dedup.hamming64PairsIncremental(freshFp, index, maxHamming)
-          val losers = Dedup.survivorAssignment(pairs)
-            .where(col("id") =!= col("survivor_id"))
-            .select(col("id"))
-          val kept = fresh.join(losers,
-            fresh(idCol).cast("long") === losers("id"), "left_anti")
-            .localCheckpoint()
-          kept.write.mode("overwrite")
-            .parquet(s"$corpusDir/batch=$batchId")
-          freshFp.join(kept.select(col(idCol).cast("long").as("id")),
-              Seq("id"), "left_semi")
-            .write.mode("overwrite")
-            .parquet(s"$indexDir/batch=$batchId")
-        }
-      }
-      .start()
-  }
+      hashFn: (DataFrame, String, String) => DataFrame): StreamingQuery =
+    survivorIngest(stream, idCol, Seq(idCol, binCol), corpusDir, indexDir,
+        checkpointDir) { (fresh, prior) =>
+      // hash ONCE per batch; only these slim rows are ever persisted
+      val freshFp = hashFn(fresh, idCol, binCol).localCheckpoint()
+      (Dedup.hamming64PairsIncremental(freshFp,
+        prior(indexDir, "id BIGINT, fp BIGINT"), maxHamming), freshFp)
+    }
 
   /** Continuous boilerplate removal: each micro-batch of documents cleans
     * itself against the corpus-wide span frequencies — its own spans plus
@@ -607,12 +393,10 @@ object Pipelines {
     * under the negative partition value `batch=-(batchId+1)` — negative
     * values mark bases, so the read path (newest base + delta partitions
     * after it, partition-pruned) identifies state from the directory
-    * listing alone, and deleting superseded partitions is pure hygiene
-    * that correctness never depends on. A half-written base is harmless:
-    * only batches AFTER a successful batchId read `batch=-(batchId+1)`,
-    * and the retry of batchId excludes its own partitions. Read the index
-    * externally with [[readSpanDfIndex]] — summing the raw partitions
-    * double-counts once a base exists.
+    * listing alone. A replayed batch sees exactly the state its first
+    * attempt saw (see [[indexedIngest]]). Read the index externally with
+    * [[readSpanDfIndex]] — summing the raw partitions double-counts once a
+    * base exists.
     *
     * Streaming semantics caveat, by design: a span that only becomes
     * frequent in a later batch is cut from that batch on, not
@@ -625,7 +409,7 @@ object Pipelines {
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.CorpusStats
     indexedIngest(stream, idCol, textCol, cleanDir, indexDir, checkpointDir,
-      compactEvery, "h", "span_df",
+      compactEvery, counts("h", "span_df"),
       (idx, fresh) => CorpusStats.removeRepeatedSpansIncremental(
         idx, fresh, idCol, textCol, spanTokens, maxDf),
       CorpusStats.mergeSpanDfIndex)
@@ -650,21 +434,18 @@ object Pipelines {
       minRunTokens: Int = 20,
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.CorpusStats
-    indexedIngestAgg(stream, idCol, textCol, cleanDir, indexDir,
-      checkpointDir, compactEvery, emptySubstrIndex, mergeAllSubstr,
+    indexedIngest(stream, idCol, textCol, cleanDir, indexDir,
+      checkpointDir, compactEvery, substrIndex,
       (idx, fresh) => CorpusStats.removeDuplicateSubstringsIncremental(
         idx, fresh, idCol, textCol, minRunTokens),
       CorpusStats.mergeSubstrKeeperIndex)
   }
 
-  private def emptySubstrIndex(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq.empty[(String, Long, Long)].toDF("h", "keep_id", "n_occ")
-  }
-
-  private def mergeAllSubstr(df: DataFrame): DataFrame =
-    df.groupBy("h").agg(min(col("keep_id")).as("keep_id"),
-      sum(col("n_occ")).as("n_occ"))
+  private val substrIndex = IndexShape(
+    s => { import s.implicits._
+      Seq.empty[(String, Long, Long)].toDF("h", "keep_id", "n_occ") },
+    _.groupBy("h").agg(min(col("keep_id")).as("keep_id"),
+      sum(col("n_occ")).as("n_occ")))
 
   /** The corpus-wide substring keeper index at `indexDir` (written by
     * [[substringDedupIngest]]): newest base + deltas after it, folded to
@@ -672,8 +453,7 @@ object Pipelines {
     * index is empty.
     */
   def readSubstrIndex(spark: SparkSession, indexDir: String): DataFrame =
-    indexStateAgg(spark, indexDir, None, mergeAllSubstr)._1
-      .getOrElse(emptySubstrIndex(spark))
+    readIndex(spark, indexDir, substrIndex)
 
   /** Continuous SemDeDup (the embedding modality's ingest loop): each
     * micro-batch of (id, embedding) rows is semantically deduplicated
@@ -697,19 +477,13 @@ object Pipelines {
       indexDir: String, checkpointDir: String,
       maxClusterSize: Int = 10000,
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery =
-    indexedIngestAgg(stream, idCol, vecCol, cleanDir, indexDir,
-      checkpointDir, compactEvery, emptySemDedupState,
-      mergeAllSemDedup,
+    indexedIngest(stream, idCol, vecCol, cleanDir, indexDir,
+      checkpointDir, compactEvery, semDedupState,
       (idx, fresh) => graft.llm.Similarity.semDedupIncremental(
         idx, fresh, centroids, threshold, idCol, vecCol, maxClusterSize),
       (a, b) => a.unionByName(b).dropDuplicates("id"))
 
-  private def emptySemDedupState(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq.empty[(Int, Long, Seq[Int])].toDF("cell", "id", "q")
-  }
-
-  /** Fold raw persisted state partitions to one row per id, PROJECTED to
+  /** Folds raw persisted state partitions to one row per id, PROJECTED to
     * the state schema. The explicit select matters: the frame read off
     * disk carries the `batch` partition column, and a bare
     * `dropDuplicates("id")` (unlike the groupBy every count index uses)
@@ -718,16 +492,17 @@ object Pipelines {
     * ingest (r14 find: the declared-config fuzz twin was the first
     * caller to compact semdedup state).
     */
-  private def mergeAllSemDedup(df: DataFrame): DataFrame =
-    df.select(col("cell"), col("id"), col("q")).dropDuplicates("id")
+  private val semDedupState = IndexShape(
+    s => { import s.implicits._
+      Seq.empty[(Int, Long, Seq[Int])].toDF("cell", "id", "q") },
+    _.select(col("cell"), col("id"), col("q")).dropDuplicates("id"))
 
   /** The accumulated (cell, id, q8) SemDeDup state at `indexDir` (written
     * by [[semDedupIngest]]): newest base + deltas, one row per ingested
     * vector. Empty frame if the index is empty.
     */
   def readSemDedupState(spark: SparkSession, indexDir: String): DataFrame =
-    indexStateAgg(spark, indexDir, None, mergeAllSemDedup)._1
-      .getOrElse(emptySemDedupState(spark))
+    readIndex(spark, indexDir, semDedupState)
 
   /** Continuous corpus-datacard state: each micro-batch contributes its
     * slim per-doc facts ([[graft.llm.CorpusStats.datacardDocStats]] —
@@ -752,9 +527,8 @@ object Pipelines {
       frozenPieces: Option[DataFrame] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.CorpusStats
-    indexedIngestAgg(stream, idCol, textCol, statsDir, ltfDir,
-      checkpointDir, compactEvery, emptyLtf(langCol),
-      mergeAllLtf(langCol),
+    indexedIngest(stream, idCol, textCol, statsDir, ltfDir,
+      checkpointDir, compactEvery, ltfIndex(langCol),
       (_, fresh) => (
         CorpusStats.datacardDocStats(fresh, idCol, textCol, langCol,
           frozenPieces),
@@ -763,13 +537,10 @@ object Pipelines {
       extraCols = Seq(langCol))
   }
 
-  private def emptyLtf(langCol: String)(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq.empty[(String, String, Long)].toDF(langCol, "word", "freq")
-  }
-
-  private def mergeAllLtf(langCol: String)(df: DataFrame): DataFrame =
-    df.groupBy(col(langCol), col("word")).agg(sum(col("freq")).as("freq"))
+  private def ltfIndex(langCol: String) = IndexShape(
+    s => { import s.implicits._
+      Seq.empty[(String, String, Long)].toDF(langCol, "word", "freq") },
+    _.groupBy(col(langCol), col("word")).agg(sum(col("freq")).as("freq")))
 
   /** The resolved (lang, word, freq) language-token-frequency index at
     * `ltfDir` (written by [[datacardIngest]]): newest base + deltas, one
@@ -777,8 +548,7 @@ object Pipelines {
     */
   def readLtfIndex(spark: SparkSession, ltfDir: String,
       langCol: String = "lang"): DataFrame =
-    indexStateAgg(spark, ltfDir, None, mergeAllLtf(langCol))._1
-      .getOrElse(emptyLtf(langCol)(spark))
+    readIndex(spark, ltfDir, ltfIndex(langCol))
 
   /** The datacard panel assembled from [[datacardIngest]] state: slim
     * per-doc facts + the resolved frequency index, never the text.
@@ -786,26 +556,12 @@ object Pipelines {
   def datacardRead(spark: SparkSession, statsDir: String, ltfDir: String,
       idCol: String = "doc_id", langCol: String = "lang"): DataFrame = {
     // a reader racing the first micro-batch sees no stats yet — an empty
-    // panel, not a PATH_NOT_FOUND crash (the readSubstrIndex convention).
-    // Within an existing dir, only COMMITTED `batch=` partitions (those
-    // with a `_SUCCESS` marker) are read: a reader concurrent with a
-    // batch=N overwrite — including a failure-recovery replay — must not
-    // see a half-written stats partition (r10 ADVICE; the ltf side gets
-    // the same gating inside indexStateAgg)
-    val statsPath = new org.apache.hadoop.fs.Path(statsDir)
-    val fs = statsPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed =
-      if (!fs.exists(statsPath)) Nil
-      else fs.listStatus(statsPath).toSeq.map(_.getPath)
-        .filter(p => p.getName.startsWith("batch="))
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-        .flatMap(p => scala.util.Try(
-          p.getName.stripPrefix("batch=").toLong).toOption)
-    val stats =
-      if (committed.nonEmpty) {
-        val raw = spark.read.parquet(statsDir)
-          .where(col("batch").isin(committed: _*))
+    // panel, not a PATH_NOT_FOUND crash; only committed partitions are
+    // read (a half-written stats partition of a concurrent batch or its
+    // replay is never seen), like every external reader here
+    val stats = readPartitions(spark, statsDir,
+        batchPartitions(spark, statsDir, committedOnly = true))
+      .map { raw =>
         // frozen-tokenizer ingests persist two extra additive facts; the
         // panel appends fertility_micro when it sees them (schema-driven)
         val fertCols =
@@ -815,13 +571,9 @@ object Pipelines {
         raw.select(Seq(col(langCol), col(idCol), col("n_toks"), col("q6"),
           col("text_md5"), col("dominant")) ++ fertCols: _*)
       }
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          s"$langCol STRING, $idCol BIGINT, n_toks BIGINT, " +
-            "q6 DECIMAL(18,6), text_md5 STRING, dominant STRING"))
-    val ltf = indexStateAgg(spark, ltfDir, None, mergeAllLtf(langCol))._1
-      .getOrElse(emptyLtf(langCol)(spark))
+      .getOrElse(emptyOf(s"$langCol STRING, $idCol BIGINT, n_toks BIGINT, " +
+        "q6 DECIMAL(18,6), text_md5 STRING, dominant STRING")(spark))
+    val ltf = readIndex(spark, ltfDir, ltfIndex(langCol))
     graft.llm.CorpusStats.datacardPanel(stats, ltf, langCol, idCol)
   }
 
@@ -842,7 +594,7 @@ object Pipelines {
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.CorpusStats
     indexedIngest(stream, idCol, textCol, cleanDir, indexDir, checkpointDir,
-      compactEvery, "h", "para_df",
+      compactEvery, counts("h", "para_df"),
       (idx, fresh) => CorpusStats.dropRepeatedParagraphsIncremental(
         idx, fresh, idCol, textCol, maxDf),
       CorpusStats.mergeParaDfIndex)
@@ -873,7 +625,7 @@ object Pipelines {
     import graft.llm.Dsir
     val tgt = targetDist.withColumnRenamed("cnt", "ct")
     indexedIngest(stream, idCol, textCol, weightsDir, indexDir,
-      checkpointDir, compactEvery, "bkt", "cnt",
+      checkpointDir, compactEvery, counts("bkt", "cnt"),
       (idx, fresh) => {
         val feats = Dsir.hashedFeatures(fresh, idCol, textCol)
           .localCheckpoint()
@@ -904,8 +656,8 @@ object Pipelines {
       checkpointDir: String,
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.Dsir
-    indexedIngestAgg(stream, idCol, textCol, featsDir, distDir,
-      checkpointDir, compactEvery, emptyDsirDist, mergeAllDsirDist,
+    indexedIngest(stream, idCol, textCol, featsDir, distDir,
+      checkpointDir, compactEvery, dsirDist,
       (_, fresh) => {
         val feats = Dsir.hashedFeatures(fresh, idCol, textCol)
           // the per-row target flag makes every doc's FULL contribution
@@ -923,7 +675,7 @@ object Pipelines {
             coalesce(col("ct"), lit(0L)).as("ct"))
         (feats, delta)
       },
-      (a, b) => mergeAllDsirDist(a.unionByName(b)),
+      (a, b) => dsirDist.mergeAll(a.unionByName(b)),
       extraCols = Seq(targetCol))
   }
 
@@ -932,17 +684,13 @@ object Pipelines {
     * after it, one row per bucket. Empty frame if the index is empty.
     */
   def readDsirDist(spark: SparkSession, distDir: String): DataFrame =
-    indexStateAgg(spark, distDir, None, mergeAllDsirDist)._1
-      .getOrElse(emptyDsirDist(spark))
+    readIndex(spark, distDir, dsirDist)
 
-  private def emptyDsirDist(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq.empty[(String, Long, Long)].toDF("bkt", "cr", "ct")
-  }
-
-  private def mergeAllDsirDist(df: DataFrame): DataFrame =
-    df.groupBy(col("bkt"))
-      .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
+  private val dsirDist = IndexShape(
+    s => { import s.implicits._
+      Seq.empty[(String, Long, Long)].toDF("bkt", "cr", "ct") },
+    _.groupBy(col("bkt"))
+      .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct")))
 
   /** Exact retro-score over [[dsirSelfIngest]] state: every committed
     * batch's persisted features, weighted against the resolved FULL
@@ -965,48 +713,15 @@ object Pipelines {
       distDir: String, idCol: String = "doc_id",
       forgotten: Option[DataFrame] = None): DataFrame = {
     import graft.llm.Dsir
-    // Consistent-prefix read under a CONCURRENT ingest (r13 ADVICE): the
-    // writer commits feats batch=N strictly BEFORE the dist delta
-    // batch=N, so a reader in that window would see feature rows whose
-    // buckets are absent from the resolved (bkt, cr, ct) index —
-    // weightsOfFeatures now raise_errors on that, but routine concurrency
-    // should not fail at all. Score exactly the batches whose dist
-    // contribution is resolvable AND resolve the dist from exactly the
-    // batches being scored: a base partition batch=-(b+1) covers every
-    // ingested batch ≤ b (feats for those committed before their deltas,
-    // and replays are content-identical by the foreachBatch checkpoint
-    // contract), and each positive delta is an independent additive
-    // partition, so the two-sided intersection is exact — bit-identical
-    // to importanceWeights over the prefix corpus.
-    // distDir is listed FIRST (r14 ADVICE): the writer commits feats
-    // batch=N strictly before dist batch=N, so a feats listing taken
-    // AFTER the dist listing is always at least as fresh — every batch
-    // the resolved base/deltas cover is then present in featsCommitted,
-    // and a dist compaction racing between the two listings can only
-    // WIDEN feats (harmless: the intersection below cuts it back), never
-    // leave the distributions spanning a superset of the scored docs.
-    val distParts = committedBatchIds(spark, distDir)
-    val featsCommitted = committedBatchIds(spark, featsDir)
-    val baseOpt = distParts.filter(_ < 0).map(v => -v - 1).sorted.lastOption
-    val featsSet = featsCommitted.toSet
-    val scoredDeltas = distParts
-      .filter(v => v >= 0 && baseOpt.forall(v > _) && featsSet(v))
-    val committed = featsCommitted
-      .filter(n => baseOpt.exists(n <= _) || scoredDeltas.contains(n))
-    val all =
-      if (committed.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            s"$idCol BIGINT, bkt STRING, m BIGINT, is_tgt BOOLEAN"))
-      else spark.read.parquet(featsDir)
-        .where(col("batch").isin(committed: _*))
-        .select(col(idCol), col("bkt"), col("m"), col("is_tgt"))
-    val distIncluded = baseOpt.map(b => -(b + 1)).toSeq ++ scoredDeltas
-    val dist =
-      if (distIncluded.isEmpty) emptyDsirDist(spark)
-      else mergeAllDsirDist(spark.read.parquet(distDir)
-        .where(col("batch").isin(distIncluded: _*)))
+    // a reader concurrent with the ingest scores exactly the batches whose
+    // dist contribution is resolvable, against a dist resolved from exactly
+    // those batches — bit-identical to importanceWeights over the prefix
+    val (distParts, featsBatches) = consistentPrefix(spark, distDir, featsDir)
+    val all = readPartitions(spark, featsDir, featsBatches)
+      .map(_.select(col(idCol), col("bkt"), col("m"), col("is_tgt")))
+      .getOrElse(emptyOf(
+        s"$idCol BIGINT, bkt STRING, m BIGINT, is_tgt BOOLEAN")(spark))
+    val dist = foldPartitions(spark, distDir, distParts, dsirDist)
     // Deletion propagation (right-to-be-forgotten / unlearning for
     // curation state): every persisted batch stays IMMUTABLE — the
     // tombstoned docs' rows still sit on disk — but because each row
@@ -1039,22 +754,6 @@ object Pipelines {
           corrected.filter(col("ct") > 0).select(col("bkt"), col("ct")))
     }
     Dsir.weightsOfFeatures(feats, rawD, tgtD, idCol)
-  }
-
-  /** Batch ids under `dir` whose `batch=` partition carries a `_SUCCESS`
-    * marker — the committed-partitions read convention (a reader
-    * concurrent with a batch overwrite must not see a half-written
-    * partition). */
-  private def committedBatchIds(spark: SparkSession,
-      dir: String): Seq[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Nil
-    else fs.listStatus(path).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("batch="))
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      .flatMap(p => scala.util.Try(
-        p.getName.stripPrefix("batch=").toLong).toOption)
   }
 
   /** Continuous BITEXT-side ingestion (r16 VERDICT ask #1 — the last
@@ -1095,10 +794,8 @@ object Pipelines {
       s"bitextIngest: needs FIXED tables > 0 and bits > 0 (got $tables, " +
         s"$bits) — auto-sizing would re-width the index as the corpus " +
         "grows, orphaning persisted buckets")
-    indexedIngestAgg(stream, idCol, vecCol, vecsDir, idxDir,
-      checkpointDir, compactEvery,
-      emptyBitextIdx,
-      _.select(col("id"), col("table"), col("bucket")),
+    indexedIngest(stream, idCol, vecCol, vecsDir, idxDir,
+      checkpointDir, compactEvery, bitextIdx,
       (_, fresh) => {
         // both persisted frames derive from the quantization of the
         // ALREADY-checkpointed batch. No q8 checkpoint (r18): the
@@ -1114,47 +811,26 @@ object Pipelines {
       (a, b) => a.unionByName(b))
   }
 
-  private def emptyBitextIdx(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq.empty[(Long, Int, Long)].toDF("id", "table", "bucket")
-  }
+  private val bitextIdx = IndexShape(
+    s => { import s.implicits._
+      Seq.empty[(Long, Int, Long)].toDF("id", "table", "bucket") },
+    _.select(col("id"), col("table"), col("bucket")))
 
   /** One side's resolved bitext state: (`(id, q)` vectors,
     * `(id, table, bucket)` index rows) over exactly the batches whose
-    * BOTH frames are committed. The loop writes a batch's vecs rows
-    * strictly BEFORE its index rows, so the index listing is taken
-    * first (the dsirRetroScore consistent-prefix argument with vecs
-    * playing feats and the index playing dist): every batch the
-    * resolved index base/deltas cover is then present in the vecs
-    * listing, and a batch whose index rows have not landed yet is
-    * EXCLUDED from both frames — a vector with no index rows would
-    * silently never be a candidate, the one inconsistency this
-    * intersection forbids.
+    * BOTH frames are committed ([[consistentPrefix]], vecs playing the
+    * rows): a batch whose index rows have not landed yet is EXCLUDED
+    * from both frames — a vector with no index rows would silently never
+    * be a candidate, the one inconsistency this intersection forbids.
     */
   def readBitextSide(spark: SparkSession, vecsDir: String,
       idxDir: String): (DataFrame, DataFrame) = {
-    val idxParts = committedBatchIds(spark, idxDir)
-    val vecsCommitted = committedBatchIds(spark, vecsDir)
-    val baseOpt = idxParts.filter(_ < 0).map(v => -v - 1).sorted.lastOption
-    val vecsSet = vecsCommitted.toSet
-    val deltas = idxParts
-      .filter(v => v >= 0 && baseOpt.forall(v > _) && vecsSet(v))
-    val vecsBatches = vecsCommitted
-      .filter(n => baseOpt.exists(n <= _) || deltas.contains(n))
-    val vecs =
-      if (vecsBatches.isEmpty) {
-        import spark.implicits._
-        Seq.empty[(Long, Seq[Int])].toDF("id", "q")
-      } else spark.read.parquet(vecsDir)
-        .where(col("batch").isin(vecsBatches: _*))
-        .select(col("id"), col("q"))
-    val idxIncluded = baseOpt.map(b => -(b + 1)).toSeq ++ deltas
-    val idx =
-      if (idxIncluded.isEmpty) emptyBitextIdx(spark)
-      else spark.read.parquet(idxDir)
-        .where(col("batch").isin(idxIncluded: _*))
-        .select(col("id"), col("table"), col("bucket"))
-    (vecs, idx)
+    val (idxParts, vecsBatches) = consistentPrefix(spark, idxDir, vecsDir)
+    val vecs = readPartitions(spark, vecsDir, vecsBatches)
+      .map(_.select(col("id"), col("q")))
+      .getOrElse { import spark.implicits._
+        Seq.empty[(Long, Seq[Int])].toDF("id", "q") }
+    (vecs, foldPartitions(spark, idxDir, idxParts, bitextIdx))
   }
 
   /** Read-time margin mining over two [[bitextIngest]] states: resolve
@@ -1244,7 +920,8 @@ object Pipelines {
       persist: Boolean = false): DataFrame = {
     val mergeAll: DataFrame => DataFrame =
       _.groupBy(keyCols.map(col): _*).agg(sum(col(cntCol)).as(cntCol))
-    indexStateAgg(spark, indexDir, None, mergeAll)._1 match {
+    readPartitions(spark, indexDir, liveCommitted(spark, indexDir))
+        .map(mergeAll) match {
       case None => contribution.limit(0) // empty index: nothing to forget
       case Some(idx) =>
         val gone = mergeAll(contribution).withColumnRenamed(cntCol, "__gone")
@@ -1305,13 +982,9 @@ object Pipelines {
     */
   private def foldAsNewBase(spark: SparkSession, indexDir: String,
       corrected: DataFrame): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (!fs.exists(path)) Nil
-      else fs.listStatus(path).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
+    val fs = new Path(indexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = batchPartitions(spark, indexDir, committedOnly = false)
     if (parts.isEmpty) return corrected
     val maxB = parts.map(v => if (v < 0) -v - 1 else v).max
     val target = new org.apache.hadoop.fs.Path(s"$indexDir/batch=-${maxB + 1}")
@@ -1468,7 +1141,7 @@ object Pipelines {
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.Retrieval
     indexedIngest(stream, idCol, textCol, scoresDir, indexDir,
-      checkpointDir, compactEvery, "term", "df",
+      checkpointDir, compactEvery, counts("term", "df"),
       (idx, fresh) => {
         val freshIdx = Retrieval.bm25Index(fresh, idCol, textCol)
           .localCheckpoint()
@@ -1495,7 +1168,7 @@ object Pipelines {
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.CorpusStats
     indexedIngest(stream, idCol, textCol, scoresDir, indexDir,
-      checkpointDir, compactEvery, "ng", "cnt",
+      checkpointDir, compactEvery, counts("ng", "cnt"),
       (idx, fresh) => {
         val freshIdx = CorpusStats.ngramIndex(fresh, textCol)
           .localCheckpoint()
@@ -1524,7 +1197,7 @@ object Pipelines {
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.Classifier
     indexedIngest(stream, idCol, textCol, scoresDir, indexDir,
-      checkpointDir, compactEvery, "key", "cnt",
+      checkpointDir, compactEvery, counts("key", "cnt"),
       (idx, fresh) => {
         val freshIdx = Classifier.toKeyedModel(
           Classifier.naiveBayesTrain(fresh, textCol, expr(labelExpr)))
@@ -1609,7 +1282,7 @@ object Pipelines {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.Classifier
     indexedIngest(stream, idCol, textCol, scoresDir, indexDir,
-      checkpointDir, compactEvery, "key", "cnt",
+      checkpointDir, compactEvery, counts("key", "cnt"),
       (idx, fresh) => {
         val freshIdx = Classifier.toPerceptronState(fresh, idCol, textCol,
           expr(labelExpr), dim).localCheckpoint()
@@ -1628,20 +1301,14 @@ object Pipelines {
     * [[graft.llm.Classifier.fromKeyedModel]]. Empty frame if empty.
     */
   def readNbModel(spark: SparkSession, indexDir: String): DataFrame =
-    indexState(spark, indexDir, None, "key", "cnt")._1.getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("key", "cnt")
-    }
+    readIndex(spark, indexDir, counts("key", "cnt"))
 
   /** The accumulated reference n-gram index at `indexDir` (written by
     * [[lmScoreIngest]]): level-prefixed (ng, cnt) rows. Empty frame if
     * the index is empty.
     */
   def readNgramIndex(spark: SparkSession, indexDir: String): DataFrame =
-    indexState(spark, indexDir, None, "ng", "cnt")._1.getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("ng", "cnt")
-    }
+    readIndex(spark, indexDir, counts("ng", "cnt"))
 
   /** Continuous blocklist filtering ([[graft.llm.TextOps.blocklistCounts]],
     * streaming form): per-document phrase-hit counts for each micro-batch,
@@ -1680,24 +1347,17 @@ object Pipelines {
     statelessIngest(stream, idCol, textCol, outDir, checkpointDir,
       d => TextOps.spanCorrupt(d, idCol, textCol, noisePermille))
 
-  /** Shared engine of the STATELESS per-document signal loops: the operator
-    * is independent per document — no corpus index, so each micro-batch
-    * runs the batch operator over itself and appends under the same
-    * idempotent `batch=` partition layout as the indexed loops (a retried
-    * batch overwrites its own output).
+  /** The STATELESS per-document signal loops on the delta engine: the
+    * operator is independent per document — no corpus index, so each
+    * micro-batch runs the batch operator over its pinned (idCol, textCol)
+    * rows.
     */
   private def statelessIngest(stream: DataFrame, idCol: String,
       textCol: String, outDir: String, checkpointDir: String,
-      op: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val fresh = batch.select(col(idCol), col(textCol)).localCheckpoint()
-        if (!fresh.isEmpty)
-          op(fresh).write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+      op: DataFrame => DataFrame): StreamingQuery =
+    deltaIngest(stream, checkpointDir,
+      _.select(col(idCol), col(textCol)).localCheckpoint())(
+      fresh => Seq(outDir -> op(fresh)))
 
   private def mergeBm25Index(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).groupBy("term").agg(sum(col("df")).as("df"))
@@ -1707,121 +1367,28 @@ object Pipelines {
     * frame if the index is empty.
     */
   def readBm25Index(spark: SparkSession, indexDir: String): DataFrame =
-    indexState(spark, indexDir, None, "term", "df")._1.getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("term", "df")
-    }
+    readIndex(spark, indexDir, counts("term", "df"))
 
   /** The accumulated raw feature distribution at `indexDir` (written by
     * [[dsirIngest]]): newest base + deltas, one (bkt, cnt) row per
     * bucket. Empty frame if the index is empty.
     */
   def readDsirRawDist(spark: SparkSession, indexDir: String): DataFrame =
-    indexState(spark, indexDir, None, "bkt", "cnt")._1.getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("bkt", "cnt")
-    }
+    readIndex(spark, indexDir, counts("bkt", "cnt"))
 
   /** The corpus-wide paragraph-df index at `indexDir` (written by
     * [[paraDedupIngest]]): newest base + deltas after it, aggregated to
     * one (h, para_df) row per paragraph. Empty frame if the index is empty.
     */
   def readParaDfIndex(spark: SparkSession, indexDir: String): DataFrame =
-    indexState(spark, indexDir, None, "h", "para_df")._1.getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("h", "para_df")
-    }
-
-  /** Shared engine of the indexed-ingest loops ([[boilerplateIngest]],
-    * [[tfidfIngest]], [[paraDedupIngest]]): per batch, resolve PRIOR
-    * additive-index state (two-level base/delta, this batch's own
-    * partitions excluded so a retry is idempotent), run `step(existing
-    * index, fresh rows)` → (output rows, fresh index rows), write both
-    * under `batch=` partitions, and every `compactEvery` batches fold all
-    * live index partitions into a single compacted base at
-    * `batch=-(batchId+1)` (the write reads old partitions BEFORE any
-    * delete; losing a delete only leaves dead files the read path
-    * prunes). The empty-index frame is (`keyCol` STRING, `cntCol` LONG).
-    */
-  private def indexedIngest(stream: DataFrame, idCol: String, textCol: String,
-      outDir: String, indexDir: String, checkpointDir: String,
-      compactEvery: Int, keyCol: String, cntCol: String,
-      step: (DataFrame, DataFrame) => (DataFrame, DataFrame),
-      merge: (DataFrame, DataFrame) => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    indexedIngestAgg(stream, idCol, textCol, outDir, indexDir,
-      checkpointDir, compactEvery,
-      s => { import s.implicits._; Seq.empty[(String, Long)].toDF(keyCol, cntCol) },
-      _.groupBy(keyCol).agg(sum(col(cntCol)).as(cntCol)), step, merge)
-
-  /** [[indexedIngest]] generalized past (key, count) state: `empty` builds
-    * the zero-state frame and `mergeAll` folds raw persisted partition
-    * rows to one row per key — a (min, sum) keeper index composes here
-    * exactly like an additive count index.
-    */
-  private def indexedIngestAgg(stream: DataFrame, idCol: String,
-      textCol: String, outDir: String, indexDir: String,
-      checkpointDir: String, compactEvery: Int,
-      empty: SparkSession => DataFrame,
-      mergeAll: DataFrame => DataFrame,
-      step: (DataFrame, DataFrame) => (DataFrame, DataFrame),
-      merge: (DataFrame, DataFrame) => DataFrame,
-      extraCols: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(compactEvery > 0, s"compactEvery must be positive, got $compactEvery")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch
-          .select((Seq(idCol, textCol) ++ extraCols).map(col): _*)
-          .localCheckpoint()
-        if (!fresh.isEmpty) {
-          val (existing, priorParts) =
-            indexStateAgg(spark, indexDir, Some(batchId), mergeAll)
-          val existingIndex = existing.getOrElse(empty(spark))
-          val (out, freshIdx) = step(existingIndex, fresh)
-          out.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          if (batchId % compactEvery == compactEvery - 1) {
-            // SIZE-AWARE compaction (was coalesce(1) through r8): the
-            // merged base gets ceil(liveBytes / 256 MiB) files, sized from
-            // the on-disk bytes of the partitions being folded — a term-df
-            // index is vocab-sized and usually one file, but a web-scale
-            // junk-token vocab must not funnel through a single task. The
-            // fresh delta isn't on disk yet; its bytes are bounded by one
-            // micro-batch and rounding up covers it.
-            val fs = new org.apache.hadoop.fs.Path(indexDir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val liveBytes = priorParts.map { v =>
-              val p = new org.apache.hadoop.fs.Path(s"$indexDir/batch=$v")
-              if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-            }.sum
-            val nFiles = math.max(1L, (liveBytes + (256L << 20) - 1) / (256L << 20)).toInt
-            merge(existingIndex, freshIdx)
-              .coalesce(nFiles)
-              .write.mode("overwrite")
-              .parquet(s"$indexDir/batch=-${batchId + 1}")
-            (priorParts :+ batchId).distinct.foreach { v =>
-              fs.delete(
-                new org.apache.hadoop.fs.Path(s"$indexDir/batch=$v"), true)
-            }
-          } else {
-            freshIdx.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-          }
-        }
-      }
-      .start()
-  }
+    readIndex(spark, indexDir, counts("h", "para_df"))
 
   /** The corpus-wide span-df index at `indexDir` (written by
     * [[boilerplateIngest]]): newest base + deltas after it, aggregated to
     * one (h, span_df) row per span. Empty frame if the index is empty.
     */
   def readSpanDfIndex(spark: SparkSession, indexDir: String): DataFrame =
-    spanIndexState(spark, indexDir, None)._1.getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("h", "span_df")
-    }
+    readIndex(spark, indexDir, counts("h", "span_df"))
 
   /** Continuous TF-IDF keyword extraction: each micro-batch of documents is
     * ranked against the corpus-wide term document frequencies — its own
@@ -1844,7 +1411,7 @@ object Pipelines {
       compactEvery: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.CorpusStats
     indexedIngest(stream, idCol, textCol, keywordsDir, indexDir,
-      checkpointDir, compactEvery, "term", "df",
+      checkpointDir, compactEvery, counts("term", "df"),
       (idx, fresh) => CorpusStats.tfidfKeywordsIncremental(
         idx, fresh, idCol, textCol, k),
       CorpusStats.mergeTermDfIndex)
@@ -1855,71 +1422,241 @@ object Pipelines {
     * (term, df) row per term. Empty frame if the index is empty.
     */
   def readTermDfIndex(spark: SparkSession, indexDir: String): DataFrame =
-    termIndexState(spark, indexDir, None)._1.getOrElse {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("term", "df")
-    }
+    readIndex(spark, indexDir, counts("term", "df"))
 
-  private def spanIndexState(spark: SparkSession, indexDir: String,
-      excludeBatch: Option[Long]): (Option[DataFrame], Seq[Long]) =
-    indexState(spark, indexDir, excludeBatch, "h", "span_df")
+  // ------------------------------------------------------------------
+  // The `batch=` ingest-state layout and its three micro-batch engines.
+  // Every ingest loop above runs on one of them:
+  //   - survivorIngest: near-dup dedup against a persisted index; each
+  //     batch keeps its survivors and their index rows;
+  //   - deltaIngest: each batch writes its own mergeable delta and reads
+  //     nothing back; readers merge the partitions;
+  //   - indexedIngest: each batch reads a two-level (base/delta) index,
+  //     writes its output and index delta, and periodically compacts.
+  // A batch writes only `dir/batch=<batchId>` partitions, with overwrite,
+  // plus (indexed engine) a compacted base `batch=-(batchId+1)`.
+  // Replay invariant: a replayed batch sees exactly the state its first
+  // attempt saw, so it rewrites the same rows. It reads every partition
+  // but its own delta and base, and a partition is deleted only once no
+  // batch that could still be replayed reads it.
+  // ------------------------------------------------------------------
 
-  private def termIndexState(spark: SparkSession, indexDir: String,
-      excludeBatch: Option[Long]): (Option[DataFrame], Seq[Long]) =
-    indexState(spark, indexDir, excludeBatch, "term", "df")
-
-  /** Resolve a two-level (base/delta) additive index: list `batch=`
-    * partition values (a pure directory listing — no data read), pick the
-    * newest base (negative value), and build the aggregated frame from
-    * that base plus the deltas after it, partition-pruned. `excludeBatch`
-    * removes the running batch's own partitions (retry must see PRIOR
-    * state only). Returns (aggregated index if any, ALL listed partition
-    * values after the exclusion — a compaction folds exactly this set
-    * into its new base and deletes it).
+  /** The `batch=` partition values under `dir`, from one directory
+    * listing (no data read); none if `dir` is absent. `committedOnly`
+    * keeps the partitions with a `_SUCCESS` marker — what an external
+    * reader needs, since a concurrent batch or its replay may be
+    * mid-overwrite. The engines list without it: a loop is the single
+    * writer of its dirs, and its only in-flight partitions are its own.
     */
-  private def indexState(spark: SparkSession, indexDir: String,
-      excludeBatch: Option[Long], keyCol: String,
-      cntCol: String): (Option[DataFrame], Seq[Long]) =
-    indexStateAgg(spark, indexDir, excludeBatch,
-      _.groupBy(keyCol).agg(sum(col(cntCol)).as(cntCol)))
+  private def batchPartitions(spark: SparkSession, dir: String,
+      committedOnly: Boolean): Seq[Long] = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Nil
+    else fs.listStatus(path).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("batch="))
+      .filter(p => !committedOnly || fs.exists(new Path(p, "_SUCCESS")))
+      .flatMap(_.getName.stripPrefix("batch=").toLongOption)
+  }
 
-  private def indexStateAgg(spark: SparkSession, indexDir: String,
-      excludeBatch: Option[Long],
-      mergeAll: DataFrame => DataFrame): (Option[DataFrame], Seq[Long]) = {
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(idxPath)) return (None, Nil)
-    val skip: Set[Long] =
-      excludeBatch.map(b => Set(b, -(b + 1))).getOrElse(Set.empty)
-    // External readers (excludeBatch = None) additionally skip partitions
-    // without a `_SUCCESS` marker — a concurrent ingest's half-written
-    // delta (or a replayed batch mid-overwrite) must not be read. The
-    // ingest path itself needs no marker check: streaming is
-    // single-writer, so the only in-flight partition is its own batch,
-    // which the explicit exclusion already removes.
-    val vals = fs.listStatus(idxPath).toSeq
-      .filter(_.getPath.getName.startsWith("batch="))
-      .filter(st => excludeBatch.isDefined ||
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("batch="))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .filterNot(skip)
-    if (vals.isEmpty) return (None, Nil)
-    val baseId = vals.filter(_ < 0).map(v => -v - 1).sorted.lastOption
-    // deltas after the base are the positives > b (b ≥ 0, so negatives —
-    // older bases — fall out of the range check for free)
-    val notCurrent = excludeBatch.fold(lit(true))(x => col("batch") =!= x)
-    val cond = baseId match {
-      case Some(b) => (col("batch") === -(b + 1)) ||
-        (col("batch") > b && notCurrent)
-      case None => col("batch") >= 0 && notCurrent
-    }
-    // conjoin the vetted snapshot listing: the range condition alone
-    // would re-admit a partition that appeared (or lost its marker)
-    // between the listing and the read
-    val df = mergeAll(spark.read.parquet(indexDir)
-      .where(cond && col("batch").isin(vals: _*)))
-    (Some(df), vals.distinct)
+  /** The live partitions of a listing: the newest base `-(b+1)` (it
+    * covers every batch ≤ b) plus the deltas after it — every delta when
+    * there is no base. The rest of the listing is superseded.
+    */
+  private def livePartitions(parts: Seq[Long]): Seq[Long] = {
+    val base = parts.filter(_ < 0).map(v => -v - 1).maxOption
+    base.map(b => -(b + 1)).toSeq ++
+      parts.filter(v => v >= 0 && base.forall(v > _))
+  }
+
+  /** The live committed partitions of `dir`: what an external reader
+    * resolves. */
+  private def liveCommitted(spark: SparkSession, dir: String): Seq[Long] =
+    livePartitions(batchPartitions(spark, dir, committedOnly = true))
+
+  /** What micro-batch `batchId` reads of `dir`: (the live partitions of
+    * everything but its own delta and base, the superseded rest). */
+  private def priorPartitions(spark: SparkSession, dir: String,
+      batchId: Long): (Seq[Long], Seq[Long]) = {
+    val listed = batchPartitions(spark, dir, committedOnly = false)
+      .filterNot(v => v == batchId || v == -(batchId + 1))
+    val live = livePartitions(listed)
+    (live, listed.diff(live))
+  }
+
+  /** The raw rows of the given partitions of `dir`; None for none. */
+  private def readPartitions(spark: SparkSession, dir: String,
+      parts: Seq[Long]): Option[DataFrame] =
+    if (parts.isEmpty) None
+    else Some(spark.read.parquet(dir).where(col("batch").isin(parts: _*)))
+
+  /** The empty frame of a DDL schema. */
+  private def emptyOf(ddl: String)(spark: SparkSession): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), StructType.fromDDL(ddl))
+
+  /** How a two-level index's raw partition rows fold to one row per key
+    * (`mergeAll`), and its state before any batch (`empty`). */
+  private final case class IndexShape(empty: SparkSession => DataFrame,
+      mergeAll: DataFrame => DataFrame)
+
+  /** An additive (`keyCol` STRING, `cntCol` LONG) count index. */
+  private def counts(keyCol: String, cntCol: String) = IndexShape(
+    s => { import s.implicits._; Seq.empty[(String, Long)].toDF(keyCol, cntCol) },
+    _.groupBy(keyCol).agg(sum(col(cntCol)).as(cntCol)))
+
+  private def foldPartitions(spark: SparkSession, dir: String,
+      parts: Seq[Long], shape: IndexShape): DataFrame =
+    readPartitions(spark, dir, parts).map(shape.mergeAll)
+      .getOrElse(shape.empty(spark))
+
+  /** A two-level index's resolved state for an external reader: its live
+    * committed partitions, folded; `shape`'s empty frame if there are
+    * none. */
+  private def readIndex(spark: SparkSession, dir: String,
+      shape: IndexShape): DataFrame =
+    foldPartitions(spark, dir, liveCommitted(spark, dir), shape)
+
+  /** Consistent-prefix selection for a reader concurrent with a loop that
+    * commits each batch's `rowsDir` partition strictly BEFORE its
+    * `indexDir` partition: (the index partitions to read, the rows
+    * batches to read) — the index's newest base plus the deltas whose
+    * rows are committed, and the rows batches that base or those deltas
+    * cover, so both frames describe exactly the same batches. The index
+    * is listed first: every batch its base covers is then in the rows
+    * listing, and a compaction racing between the two listings can only
+    * widen the rows side, which the intersection cuts back.
+    */
+  private def consistentPrefix(spark: SparkSession, indexDir: String,
+      rowsDir: String): (Seq[Long], Seq[Long]) = {
+    val live = liveCommitted(spark, indexDir)
+    val rows = batchPartitions(spark, rowsDir, committedOnly = true)
+    val base = live.find(_ < 0).map(v => -v - 1)
+    val included = live.filter(v => v < 0 || rows.contains(v))
+    (included, rows.filter(n => base.exists(n <= _) || included.contains(n)))
+  }
+
+  /** The survivor engine ([[nearDupIngest]], [[winnowIngest]],
+    * [[imageDedupIngest]], [[audioDedupIngest]], [[videoDedupIngest]],
+    * [[fuzzyDedupIngest]]). Per non-empty batch: pin `freshCols` of the
+    * batch (every column when empty); `step(fresh, prior)` returns the
+    * (id, survivor_id) pairs and the fresh index rows (keyed `id`), where
+    * `prior(dir, ddl)` is the rows earlier batches wrote to `dir`,
+    * projected to the DDL's columns (its empty frame before any); every
+    * fresh row whose survivor is another id is dropped; then the kept
+    * rows overwrite `corpusDir/batch=` and their index rows
+    * `indexDir/batch=`. Ids must be globally unique and increase across
+    * batches, so accepted rows always win against later arrivals.
+    */
+  private def survivorIngest(stream: DataFrame, idCol: String,
+      freshCols: Seq[String], corpusDir: String, indexDir: String,
+      checkpointDir: String)(
+      step: (DataFrame, (String, String) => DataFrame) => (DataFrame, DataFrame))
+      : StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        val fresh = (if (freshCols.isEmpty) batch.toDF()
+          else batch.select(freshCols.map(col): _*)).localCheckpoint()
+        if (!fresh.isEmpty) {
+          def prior(dir: String, ddl: String): DataFrame =
+            readPartitions(spark, dir, priorPartitions(spark, dir, batchId)._1)
+              .map(_.select(StructType.fromDDL(ddl).fieldNames.map(col): _*))
+              .getOrElse(emptyOf(ddl)(spark))
+          val (pairs, freshIndex) = step(fresh, prior)
+          val losers = Dedup.survivorAssignment(pairs)
+            .where(col("id") =!= col("survivor_id"))
+            .select(col("id"))
+          val kept = fresh.join(losers,
+            fresh(idCol).cast("long") === losers("id"), "left_anti")
+            .localCheckpoint()
+          kept.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
+          freshIndex.join(kept.select(col(idCol).cast("long").as("id")),
+              Seq("id"), "left_semi")
+            .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+        }
+      }
+      .start()
+
+  /** The delta engine (the mergeable-sketch loops and the stateless
+    * loops). Per batch: `pin` it; if non-empty, overwrite
+    * `dir/batch=<batchId>` with each of `outputs`, in order. Nothing is
+    * read back: the state is the merge of all partitions, taken at read
+    * time.
+    */
+  private def deltaIngest(stream: DataFrame, checkpointDir: String,
+      pin: DataFrame => DataFrame = identity)(
+      outputs: DataFrame => Seq[(String, DataFrame)]): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val fresh = pin(batch.toDF())
+        if (!fresh.isEmpty) outputs(fresh).foreach { case (dir, df) =>
+          df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+        }
+      }
+      .start()
+
+  /** The indexed engine: the 13 loops over a two-level base/delta index
+    * ([[boilerplateIngest]], [[substringDedupIngest]], [[semDedupIngest]],
+    * [[datacardIngest]], [[paraDedupIngest]], [[dsirIngest]],
+    * [[dsirSelfIngest]], [[bitextIngest]], [[bm25Ingest]],
+    * [[lmScoreIngest]], [[nbScoreIngest]], [[perceptronScoreIngest]],
+    * [[tfidfIngest]]). Per non-empty batch: pin (idCol, textCol,
+    * extraCols...); fold the prior live index partitions to `shape`'s
+    * state; `step(state, fresh)` returns (output rows, fresh index rows);
+    * the output overwrites `outDir/batch=`; the fresh index rows
+    * overwrite `indexDir/batch=`, except that every `compactEvery`-th
+    * batch writes `merge(state, fresh index rows)` as the new base
+    * `batch=-(batchId+1)` instead. The partitions a base supersedes are
+    * deleted by the next batch, which runs only once the compacting batch
+    * has committed: deleting them inside the compacting batch would let
+    * its replay resolve an empty index and overwrite the base with its
+    * own rows alone.
+    */
+  private def indexedIngest(stream: DataFrame, idCol: String,
+      textCol: String, outDir: String, indexDir: String,
+      checkpointDir: String, compactEvery: Int, shape: IndexShape,
+      step: (DataFrame, DataFrame) => (DataFrame, DataFrame),
+      merge: (DataFrame, DataFrame) => DataFrame,
+      extraCols: Seq[String] = Nil): StreamingQuery = {
+    require(compactEvery > 0, s"compactEvery must be positive, got $compactEvery")
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        val fresh = batch
+          .select((Seq(idCol, textCol) ++ extraCols).map(col): _*)
+          .localCheckpoint()
+        if (!fresh.isEmpty) {
+          val (live, superseded) = priorPartitions(spark, indexDir, batchId)
+          val state = foldPartitions(spark, indexDir, live, shape)
+          val (out, freshIdx) = step(state, fresh)
+          out.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+          val fs = new Path(indexDir)
+            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (batchId % compactEvery == compactEvery - 1) {
+            // SIZE-AWARE compaction: the merged base gets
+            // ceil(liveBytes / 256 MiB) files, sized from the on-disk bytes
+            // of the live partitions being folded — a term-df index is
+            // vocab-sized and usually one file, but a web-scale junk-token
+            // vocab must not funnel through a single task. The fresh delta
+            // isn't on disk yet; its bytes are bounded by one micro-batch
+            // and rounding up covers it.
+            val liveBytes = live.map(v => fs.getContentSummary(
+              new Path(s"$indexDir/batch=$v")).getLength).sum
+            val nFiles = math.max(1L, (liveBytes + (256L << 20) - 1) / (256L << 20)).toInt
+            merge(state, freshIdx)
+              .coalesce(nFiles)
+              .write.mode("overwrite")
+              .parquet(s"$indexDir/batch=-${batchId + 1}")
+          } else {
+            freshIdx.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+          }
+          superseded.foreach(v => fs.delete(new Path(s"$indexDir/batch=$v"), true))
+        }
+      }
+      .start()
   }
 
   /** Continuous attribution: each conversion credited ONCE to a same-key
