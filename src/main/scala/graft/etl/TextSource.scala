@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 /** Line-oriented byte/text sources with per-file lineage (reference S1/S2/S6).
   *
@@ -16,11 +17,19 @@ import org.apache.spark.sql.functions._
 object TextSource {
 
   val SourceCol = "source"
+  private val LineageKey = "graft.lineage"
+
+  /** Stamps each row's input file as [[SourceCol]], flagged by [[LineageKey]]. */
+  def withLineage(df: DataFrame): DataFrame = df.withColumn(SourceCol, input_file_name())
+    .withMetadata(SourceCol, new MetadataBuilder().putBoolean(LineageKey, true).build())
+
+  /** True for a [[withLineage]] column, not a data column named `source`. */
+  def hasLineage(df: DataFrame): Boolean =
+    df.schema.exists(f => f.name == SourceCol && f.metadata.contains(LineageKey))
 
   /** S1/S2: lines of one or more files/globs, with lineage column. */
   def lines(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.text(paths: _*)
-      .withColumn(SourceCol, input_file_name())
+    withLineage(spark.read.text(paths: _*))
 
   /** S6: a string literal is a source — one record per line
     * (`etl-core/src/datastore/sources/string.rs:5-29`).

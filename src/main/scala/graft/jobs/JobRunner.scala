@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.etl.ErrorTolerant
+import graft.etl.{ErrorTolerant, TextSource}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -120,13 +120,13 @@ final class JobRunner(
     var stepErrors = 0L
     val (total, written, perFile) = try {
       // Single pass, no cache: ok/err totals (and per-file counts when the
-      // frame carries a `source` lineage column) ride the sink write itself
+      // frame carries TextSource lineage) ride the sink write itself
       // as observed metrics — the pattern Transforms.copyPipeline uses. At
       // warehouse scale this is one scan of the input and zero cluster-wide
       // caching; the corrupt-record column is never projected on its own,
       // so file-backed permissive reads stay legal uncached.
       val all = decoded.all
-      val hasLineage = all.columns.contains("source")
+      val hasLineage = TextSource.hasLineage(all)
       val corrupt = col(ErrorTolerant.CorruptCol)
       val obs = Observation(s"graft.$id.$name.$step")
       // the xxhash64-over-all-columns metric pins every column into the
@@ -143,7 +143,7 @@ final class JobRunner(
       val metrics =
         if (hasLineage)
           // key = full source URI: basenames collide across directories
-          baseMetrics :+ perFileUdaf(col("source"), corrupt.isNotNull).as("per_file")
+          baseMetrics :+ perFileUdaf(col(TextSource.SourceCol), corrupt.isNotNull).as("per_file")
         else baseMetrics
       val observed = all.observe(obs, metrics.head, metrics.tail: _*)
       val written = write(ErrorTolerant.Decoded(observed).good)

@@ -100,7 +100,7 @@ object Dedup {
     * 3 lowered the default cap 100k → 10k (per-task bound); a corpus whose
     * legitimate dup clusters exceed 10k ids per band bucket must pass a
     * larger cap explicitly or those clusters dedup with reduced recall —
-    * `tools.MinhashProfile` measures the effect on a given corpus. Pairs whose
+    * ScaleProbe's `minhash_*` rows record the capped volumes. Pairs whose
     * EVERY shared bucket is degenerate are lost (recall tradeoff); near-dups
     * collide in many bands, so in practice a dropped mega-bucket costs
     * recall only for pairs that were borderline to begin with.

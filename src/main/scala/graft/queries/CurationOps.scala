@@ -527,16 +527,16 @@ object CurationOps extends QueryPack {
     }),
 
     // Cost breakdown (r13 ask #8 — the pack's #1 query is COMPOSITION
-    // cost, not a defect; graft.tools.CurateProfile reproduces this,
-    // isolated per stage at sf0.1/local[32], cold upper bounds):
-    //   nb_self_score 5.6 s COLD but StageMemo'd (warm bench: memo hit),
+    // cost, not a defect; each stage timed cold behind a localCheckpoint of
+    // its input at sf0.1/local[32]; r18 figures in OPTIMIZATION_r18.md §6):
+    //   nb_self_score 5.6 s COLD but StageMemo'd with quality_nb(_buckets),
     //   filter+checkpoint 0.3 s, winnow pairs over the KEPT subset 2.3 s,
     //   keep-central contraction 3.6 s, temperature select 1.5 s, shard
     //   balance 1.8 s — five genuinely distinct passes that pipeline
     //   lazily to the ~3 s warm number. No further shared stage exists:
     //   the pair stage runs over the NB-FILTERED corpus (reusing any
-    //   full-corpus pair stage would pair MORE rows, then filter), and
-    //   quality_perceptron fits a different model than the NB leg.
+    //   full-corpus pair stage, dedup_winnow's included, would pair MORE
+    //   rows, then filter); quality_perceptron fits a different model.
     "pipeline_curate2" -> ((s, dir) => {
       val docs = t(s, dir).documents
       val scored = nbScoreShared(s, dir)

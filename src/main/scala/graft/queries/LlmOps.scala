@@ -35,12 +35,6 @@ object LlmOps extends QueryPack {
     d.unionByName(truncated)
   }
 
-  /** The planted-near-dup profiling corpus, exposed for diagnostics tools
-    * (graft.tools.MinhashProfile recall measurement).
-    */
-  def docsForProfile(s: SparkSession, dir: String): DataFrame =
-    docsWithNearDups(s, dir)
-
   /** Shared MinHash→components chain for the five dedup-family queries
     * (`dedup_minhash`, `dedup_components`, `dedup_apply`,
     * `dedup_keep_best`, `split_leakage_free`) — memoized per

@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.{ErrorTolerant, Fixtures}
+import graft.etl.{ErrorTolerant, Fixtures, TextSource}
 import graft.jobs._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -54,10 +54,9 @@ class JobSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("good.ndjson"),
       Seq("""{"name":"x","todo":[],"id":"a"}""",
         """{"name":"y","todo":[],"id":"b"}""").mkString("\n").getBytes)
-    val dec = ErrorTolerant.Decoded(
+    val dec = ErrorTolerant.Decoded(TextSource.withLineage(
       ErrorTolerant.jsonFiles(spark,
-        Seq(s"$dir/bad.ndjson", s"$dir/good.ndjson"), tsd)
-        .all.withColumn("source", input_file_name()))
+        Seq(s"$dir/bad.ndjson", s"$dir/good.ndjson"), tsd).all))
     val r = new JobRunner("j3", "files", new InMemoryStore)
     r.runDecodedStream("decode", dec, "noop", _.count())
     val files = r.currentState.streams("decode").files
