@@ -11,6 +11,17 @@ import org.apache.spark.sql.SparkSession
   * tuned to executor count × cores), UTC session time zone so results are
   * byte-comparable with the DuckDB oracle, and TIMESTAMP_MICROS parquet
   * output so written results round-trip identically across engines.
+  *
+  * Two fixed per-job costs are taken out of every session:
+  *   - `file:` paths go through [[GraftLocalFileSystem]], which sets the
+  *     permissions of written files and directories in-process instead of
+  *     forking `chmod` for each. Hadoop caches one filesystem per scheme
+  *     and user for the whole JVM, so this holds when the session's
+  *     configuration creates the first `file:` filesystem of the process;
+  *   - SQL path reads (`parquet.`p``, `orc.`p``) resolve through
+  *     [[Tables.read]] ([[PathReadParser]]), so a path read again, or one
+  *     that a declared `parquet` sink just overwrote, launches no
+  *     schema-inference job.
   */
 object GraftSession {
 
@@ -29,6 +40,8 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+    .withExtensions(_.injectParser((session, parser) => new PathReadParser(session, parser)))
 
   /** Local session with `cores` executor threads (driver harness contract). */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {

@@ -12,7 +12,11 @@ import org.apache.spark.sql.types.StructType
   * any warehouse path. Reads go through [[Tables.read]]: the first read of a
   * table infers its schema as a plain `spark.read.parquet` does, and later
   * reads of the unchanged files reuse that schema instead of launching
-  * another inference job. Either way the result is an ordinary file-source
+  * another inference job. The same cache serves SQL path reads
+  * (`parquet.`p``, via [[PathReadParser]]) and is seeded by declared
+  * `parquet` sinks in `Overwrite` mode ([[Tables.written]]), so a job's
+  * later steps read its earlier outputs without inferring. Either way the
+  * result is an ordinary file-source
   * scan, which keeps column pruning and predicate pushdown available to
   * Catalyst (verified via `.explain`: `PushedFilters` / `ReadSchema` reach
   * the scan).
@@ -76,18 +80,34 @@ object Tables {
   def read(spark: SparkSession, format: String, options: Map[String, String],
       paths: Seq[String]): DataFrame = {
     val reader = spark.read.options(options).format(format)
-    val key = SchemaKey(format, options, paths, SchemaConfs.map(spark.conf.getOption))
-    val cache = resolvedSchemas.synchronized(resolvedSchemas.computeIfAbsent(spark,
-      _ => new ConcurrentHashMap[SchemaKey, Resolved]()))
+    val key = schemaKey(spark, format, options, paths)
     val files = listing(spark, options, paths)
-    Option(cache.get(key)).filter(r => files.contains(r.files)) match {
+    Option(cache(spark).get(key)).filter(r => files.contains(r.files)) match {
       case Some(hit) => reader.schema(hit.schema).load(paths: _*)
       case None =>
         val df = reader.load(paths: _*)
-        files.foreach(f => cache.put(key, Resolved(f, df.schema)))
+        files.foreach(f => cache(spark).put(key, Resolved(f, df.schema)))
         df
     }
   }
+
+  /** Records what a write just committed under `path`, so the next
+    * option-free [[read]] of it (`parquet.`path`` in SQL, a `parquet`
+    * source) launches no inference job. `dataSchema` is the schema of the
+    * written data files: the written frame's columns minus its
+    * `partitionBy` columns, whose types a read infers from the directory
+    * names as a plain read does. The entry holds the listing taken now,
+    * after the commit, so any later change to the files re-infers. A path
+    * without a data file is not recorded: a plain read of it fails.
+    */
+  def written(spark: SparkSession, format: String, path: String, dataSchema: StructType): Unit =
+    listing(spark, Map.empty, Seq(path))
+      .filter(_.exists { case (f, _, _) =>
+        val name = new Path(f).getName
+        !name.startsWith("_") && !name.startsWith(".")
+      })
+      .foreach(f => cache(spark).put(schemaKey(spark, format, Map.empty, Seq(path)),
+        Resolved(f, dataSchema)))
 
   /** SQL confs that change what schema a parquet or orc read resolves to. */
   val SchemaConfs: Seq[String] = Seq(
@@ -111,6 +131,14 @@ object Tables {
 
   private val resolvedSchemas =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, Resolved]]()
+
+  private def cache(spark: SparkSession): ConcurrentHashMap[SchemaKey, Resolved] =
+    resolvedSchemas.synchronized(resolvedSchemas.computeIfAbsent(spark,
+      _ => new ConcurrentHashMap[SchemaKey, Resolved]()))
+
+  private def schemaKey(spark: SparkSession, format: String, options: Map[String, String],
+      paths: Seq[String]): SchemaKey =
+    SchemaKey(format, options, paths, SchemaConfs.map(spark.conf.getOption))
 
   /** Every leaf file under `paths` (globs expanded, directories walked) as
     * sorted (path, size, modification time); None when a path matches

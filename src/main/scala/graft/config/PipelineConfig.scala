@@ -1510,8 +1510,6 @@ object PipelineConfig {
       import spark.implicits._
       spark.createDataset(c.lines)
     }
-    def noCorrupt(df: DataFrame) = ErrorTolerant.Decoded(
-      df.withColumn(ErrorTolerant.CorruptCol, lit(null).cast("string")))
     c.`type` match {
       case "csv_files" =>
         val ddl = ErrorTolerant.withCorrupt(schemaOf(c))
@@ -1532,15 +1530,15 @@ object PipelineConfig {
       case "json_lines" =>
         val ddl = schemaOf(c)
         spark => ErrorTolerant.json(spark, inline(spark), ddl)
-      case "text" => spark => noCorrupt(TextSource.lines(spark, c.paths))
+      case "text" => spark => ErrorTolerant.unparsed(TextSource.lines(spark, c.paths))
       case "parquet" | "orc" =>
-        spark => noCorrupt(graft.Tables.read(spark, c.`type`, c.options, c.paths))
+        spark => ErrorTolerant.unparsed(graft.Tables.read(spark, c.`type`, c.options, c.paths))
       case "table" =>
         val table = c.table.getOrElse(bad("source type 'table' requires a table name"))
-        spark => noCorrupt(spark.table(table))
+        spark => ErrorTolerant.unparsed(spark.table(table))
       case "sql" =>
         val query = c.query.getOrElse(bad("source type 'sql' requires a query"))
-        spark => noCorrupt(spark.sql(query))
+        spark => ErrorTolerant.unparsed(spark.sql(query))
       case other => bad(s"unknown source type '$other'")
     }
   }
@@ -1598,6 +1596,14 @@ object PipelineConfig {
           val w = df.write.mode(mode).options(c.options).format(c.`type`)
           (if (c.partitionBy.nonEmpty) w.partitionBy(c.partitionBy: _*) else w)
             .save(path)
+          // a committed overwrite leaves exactly this frame's files: later
+          // reads of the path (the next step's SQL) reuse its schema
+          if (c.`type` == "parquet" && mode == SaveMode.Overwrite) {
+            val spark = df.sparkSession
+            val resolver = spark.sessionState.conf.resolver
+            graft.Tables.written(spark, "parquet", path, StructType(
+              df.schema.filterNot(f => c.partitionBy.exists(resolver(_, f.name)))))
+          }
         }
       } else if (c.`type` == "noop" || c.`type` == "null") Writers.noop
       else bad(s"unknown sink type '${c.`type`}'")

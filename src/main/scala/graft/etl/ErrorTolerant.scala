@@ -18,8 +18,11 @@ import org.apache.spark.sql.types.{StringType, StructType}
 object ErrorTolerant {
   val CorruptCol = "_corrupt_record"
 
-  /** A decoded stream split into good rows and corrupt raw records. */
-  final case class Decoded(all: DataFrame) {
+  /** A decoded stream split into good rows and corrupt raw records.
+    * `parsed` is false when the corrupt column is a null literal over a
+    * source that parses nothing (parquet, orc, tables, SQL, text lines).
+    */
+  final case class Decoded(all: DataFrame, parsed: Boolean = true) {
     /** Rows that parsed cleanly (corrupt column dropped). */
     def good: DataFrame = all.filter(col(CorruptCol).isNull).drop(CorruptCol)
     /** The raw text of records that failed to parse.
@@ -47,6 +50,10 @@ object ErrorTolerant {
       } finally if (!wasCached) cached.unpersist()
     }
   }
+
+  /** A frame from a source that parses nothing: no row is corrupt. */
+  def unparsed(df: DataFrame): Decoded =
+    Decoded(df.withColumn(CorruptCol, lit(null).cast(StringType)), parsed = false)
 
   /** Append the corrupt-record column unless the schema already has it. */
   def withCorrupt(schema: StructType): StructType =

@@ -125,20 +125,24 @@ final class JobRunner(
       // warehouse scale this is one scan of the input and zero cluster-wide
       // caching; the corrupt-record column is never projected on its own,
       // so file-backed permissive reads stay legal uncached.
-      val all = decoded.all
+      val dec = decoded
+      val all = dec.all
       val hasLineage = TextSource.hasLineage(all)
       val corrupt = col(ErrorTolerant.CorruptCol)
       val obs = Observation(s"graft.$id.$name.$step")
-      // the xxhash64-over-all-columns metric pins every column into the
-      // scan's required schema (count(struct(..)) would be folded away):
-      // corrupt-record detection is only defined over a full-row parse — a
-      // pruned parse marks fewer rows corrupt — and it keeps count()-style
-      // sinks legal over uncached permissive reads
-      // (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
+      // over a parsed source, the xxhash64-over-all-columns metric pins
+      // every column into the scan's required schema (count(struct(..))
+      // would be folded away): corrupt-record detection is only defined
+      // over a full-row parse — a pruned parse marks fewer rows corrupt —
+      // and it keeps count()-style sinks legal over uncached permissive
+      // reads (QUERY_ONLY_CORRUPT_RECORD_COLUMN). A source that parses
+      // nothing has a literal corrupt column, so its scan stays pruned.
+      val pin =
+        if (dec.parsed) Seq(max(xxhash64(all.columns.map(col): _*)).as("_schema_pin"))
+        else Nil
       val baseMetrics = Seq(
         sum(when(corrupt.isNull, 1L).otherwise(0L)).as("ok"),
-        sum(when(corrupt.isNotNull, 1L).otherwise(0L)).as("err"),
-        max(xxhash64(all.columns.map(col): _*)).as("_schema_pin"))
+        sum(when(corrupt.isNotNull, 1L).otherwise(0L)).as("err")) ++ pin
       val perFileUdaf = udaf(new PerFileCounter)
       val metrics =
         if (hasLineage)
@@ -169,7 +173,7 @@ final class JobRunner(
         } else {
           // fallback: `write` ran no action on the frame (nothing was
           // observed) — count in a separate pass
-          val c = decoded.counts
+          val c = dec.counts
           (c._1, c._2, Map.empty[String, FileStatus])
         }
       stepErrors = err
@@ -204,10 +208,7 @@ final class JobRunner(
     */
   def runStream(step: String, df: => DataFrame, sinkName: String,
       write: DataFrame => Long): Boolean =
-    runDecodedStreamLazy(step,
-      ErrorTolerant.Decoded(df.withColumn(ErrorTolerant.CorruptCol,
-        lit(null).cast("string"))),
-      sinkName, write)
+    runDecodedStreamLazy(step, ErrorTolerant.unparsed(df), sinkName, write)
 
   /** Durable side-effect command step — `run_cmd` (`job.rs:606-643`) with
     * `stop_on_error` semantics (`state.rs:190-206`): a failing command marks

@@ -67,6 +67,40 @@ class JobSpec extends SparkSpec {
     assert(byName("good.ndjson") === FileStatus(2, 0))
   }
 
+  test("the schema pin holds a parsed source's full row and spares sources that parse nothing") {
+    import graft.config.PipelineConfig.{SourceConf, buildSource}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft_job_pin")
+    Seq((1L, 10L, "x" * 50), (2L, 20L, "y" * 50), (3L, 30L, "z" * 50))
+      .toDF("id", "b", "wide").write.parquet(s"$dir/in.parquet")
+    java.nio.file.Files.write(dir.resolve("in.ndjson"), (Seq(
+      """{"id":1,"b":10,"wide":"x"}""", """{"id":2,"b":20,"wide":"y"}""") :+ "not json")
+      .mkString("\n").getBytes)
+    val rows = Seq(
+      // (source, scanned columns of a downstream select("id"), lines, errors)
+      (SourceConf("parquet", paths = Seq(s"$dir/in.parquet")), Seq("id"), 3L, 0L),
+      (SourceConf("sql", query = Some(s"SELECT * FROM parquet.`$dir/in.parquet`")),
+        Seq("id"), 3L, 0L),
+      (SourceConf("json_files", paths = Seq(s"$dir/in.ndjson"),
+        schema = Some("id BIGINT, b BIGINT, wide STRING")),
+        Seq("id", "b", "wide", ErrorTolerant.CorruptCol), 3L, 1L))
+    rows.foreach { case (src, scanned, lines, errors) =>
+      var read = Seq.empty[String]
+      val r = new JobRunner("jpin", src.`type`, new InMemoryStore)
+      r.runDecodedStream("s", buildSource(spark, src), "noop", { df =>
+        val ids = df.select("id")
+        read = ids.queryExecution.sparkPlan.collect {
+          case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq
+        }.flatten
+        ids.count()
+      })
+      val st = r.currentState.streams("s")
+      assert(read === scanned, src.`type`)
+      assert((st.totalLinesScanned, st.numErrors) === (lines, errors), src.`type`)
+      assert(st.outputs.map(_.linesWritten) === List(lines - errors), src.`type`)
+    }
+  }
+
   test("config-form curation pipeline: kill between steps, durable resume " +
       "skips the completed step and reproduces the uninterrupted result") {
     // The analytics surface running UNDER the control plane (r10 ask #8):
