@@ -1,13 +1,14 @@
 package graft
 
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.control.NonFatal
 
 /** The session's SQL parser, with file relations read through
   * [[Tables.read]].
@@ -23,9 +24,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * A relation is rewritten only when Spark itself would read it as a file:
   * `spark.sql.runSQLOnFiles` is on, it names exactly a format and a path,
-  * it carries no SQL options, and no table or view has that name. If the
-  * read fails, the relation is left to Spark, so every error stays Spark's
-  * own (a missing path raises `PATH_NOT_FOUND` from Spark's rule).
+  * it carries no SQL options, and no table or view has that name. A read
+  * that fails with an `AnalysisException` (a missing path's
+  * `PATH_NOT_FOUND`) raises it here, as `ResolveSQLOnFile` passes such an
+  * error through unchanged, so the path is listed once; any other failure
+  * leaves the relation to Spark, whose rule then raises its own error.
   */
 private[graft] final class PathReadParser(spark: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
@@ -61,8 +64,13 @@ private[graft] final class PathReadParser(spark: SparkSession, delegate: ParserI
   private def fileRead(u: UnresolvedRelation): Option[LogicalPlan] = u.multipartIdentifier match {
     case Seq(format, path) if PathReadParser.Formats(format.toLowerCase(Locale.ROOT)) &&
         path.nonEmpty && u.options.isEmpty && !u.isStreaming && !isTableOrView(format, path) =>
-      scala.util.Try(Tables.read(spark, format.toLowerCase(Locale.ROOT), Map.empty, Seq(path))
-        .queryExecution.analyzed).toOption
+      try Some(Tables.read(spark, format.toLowerCase(Locale.ROOT), Map.empty, Seq(path))
+        .queryExecution.analyzed)
+      catch {
+        // Spark's rule would raise the same error on a second listing
+        case e: AnalysisException => throw e
+        case NonFatal(_) => None
+      }
     case _ => None
   }
 

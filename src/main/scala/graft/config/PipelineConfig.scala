@@ -1,8 +1,8 @@
 package graft.config
 
-import graft.etl.{ErrorTolerant, TextSource, Writers}
+import graft.etl.{ErrorTolerant, TextSource, Transforms, Writers}
 import graft.jobs.{JobManager, JobRunner, JobRunnerConfig, JobState, SimpleStore}
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -1607,12 +1607,7 @@ object PipelineConfig {
         }
       } else if (c.`type` == "noop" || c.`type` == "null") Writers.noop
       else bad(s"unknown sink type '${c.`type`}'")
-    df => {
-      val obs = Observation()
-      write(df.observe(obs, count(lit(1)).as("n")))
-      scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(30, "s")).getLong(0)
-    }
+    Transforms.copyPipeline(_, write)
   }
 
   /** Compile a sink config to a write action returning rows written. The
@@ -1693,9 +1688,4 @@ object PipelineConfig {
     steps.foreach(_(spark, runner))
     runner.complete()
   }
-
-  /** Convenience: load from a file and run. */
-  def runFile(spark: SparkSession, path: String, store: SimpleStore,
-      manager: Option[JobManager] = None): JobState =
-    run(spark, load(path), store, manager)
 }

@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -34,21 +36,74 @@ object ErrorTolerant {
       */
     def corrupt: DataFrame = all.filter(col(CorruptCol).isNotNull)
       .select(col(CorruptCol).as("raw"))
-    /** (ok, err) counts in one distributed pass. Self-caches briefly so the
-      * corrupt-only projection is legal for file-backed reads too.
+
+    /** The decode metrics over `all`, as aggregate columns: `ok` and `err`
+      * row counts, and `per_file` (source URI → (ok, err)) when the frame
+      * carries [[TextSource]] lineage (basenames collide across
+      * directories). Over a parsed source, `_schema_pin` (an
+      * xxhash64-over-all-columns max; `count(struct(..))` would be folded
+      * away) pins every column into the scan's required schema:
+      * corrupt-record detection is only defined over a full-row parse — a
+      * pruned parse marks fewer rows corrupt — and the metrics stay legal
+      * over uncached permissive file reads
+      * (QUERY_ONLY_CORRUPT_RECORD_COLUMN). A source that parses nothing has
+      * a literal corrupt column, so its scan stays pruned.
       */
-    def counts: (Long, Long) = {
-      // never unpersist a cache the caller created
-      val wasCached = all.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-      val cached = if (wasCached) all else all.cache()
-      try {
-        val r = cached.agg(
-          sum(when(col(CorruptCol).isNull, 1L).otherwise(0L)),
-          sum(when(col(CorruptCol).isNotNull, 1L).otherwise(0L))).head()
-        (Option(r.get(0)).fold(0L)(_.asInstanceOf[Long]),
-          Option(r.get(1)).fold(0L)(_.asInstanceOf[Long]))
-      } finally if (!wasCached) cached.unpersist()
+    def metrics: Seq[Column] = {
+      val corrupt = col(CorruptCol)
+      Seq(sum(when(corrupt.isNull, 1L).otherwise(0L)).as("ok"),
+        sum(when(corrupt.isNotNull, 1L).otherwise(0L)).as("err")) ++
+        (if (parsed) Seq(max(xxhash64(all.columns.map(col): _*)).as("_schema_pin")) else Nil) ++
+        (if (TextSource.hasLineage(all))
+          Seq(udaf(new PerFileCounter).apply(col(TextSource.SourceCol), corrupt.isNotNull)
+            .as("per_file"))
+        else Nil)
     }
+
+    /** [[metrics]] in one aggregation over `all`, as the map an observed
+      * write of them reads.
+      */
+    def measure(): Map[String, Any] = {
+      val ms = metrics
+      val row = all.agg(ms.head, ms.tail: _*).head()
+      row.getValuesMap(row.schema.fieldNames.toSeq)
+    }
+
+    /** (ok, err, per-file (ok, err)) from a row of [[metrics]]. */
+    def tally(m: Map[String, Any]): (Long, Long, Map[String, (Long, Long)]) = {
+      def long(k: String) = Option(m(k)).fold(0L)(_.asInstanceOf[Long])
+      val perFile = m.get("per_file").fold(Map.empty[String, (Long, Long)])(
+        _.asInstanceOf[scala.collection.Map[String, Row]].iterator
+          .map { case (f, c) => f -> ((c.getLong(0), c.getLong(1))) }.toMap)
+      (long("ok"), long("err"), perFile)
+    }
+
+    /** (ok, err) counts in one distributed pass, caching nothing. */
+    def counts: (Long, Long) = {
+      val (ok, err, _) = tally(measure())
+      (ok, err)
+    }
+  }
+
+  /** Per-file (ok, err) counting as an aggregate function, so it can ride
+    * a sink write inside `Dataset.observe` (observed metrics ignore retried
+    * tasks). The map is bounded by the number of distinct input files.
+    */
+  private class PerFileCounter extends Aggregator[(String, Boolean),
+      Map[String, (Long, Long)], Map[String, (Long, Long)]] {
+    def zero: Map[String, (Long, Long)] = Map.empty
+    def reduce(m: Map[String, (Long, Long)], row: (String, Boolean)): Map[String, (Long, Long)] = {
+      val (ok, err) = m.getOrElse(row._1, (0L, 0L))
+      m.updated(row._1, if (row._2) (ok, err + 1) else (ok + 1, err))
+    }
+    def merge(a: Map[String, (Long, Long)], b: Map[String, (Long, Long)]): Map[String, (Long, Long)] =
+      b.foldLeft(a) { case (m, (f, (ok, err))) =>
+        val (o, e) = m.getOrElse(f, (0L, 0L))
+        m.updated(f, (o + ok, e + err))
+      }
+    def finish(r: Map[String, (Long, Long)]): Map[String, (Long, Long)] = r
+    def bufferEncoder: Encoder[Map[String, (Long, Long)]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Map[String, (Long, Long)]] = ExpressionEncoder()
   }
 
   /** A frame from a source that parses nothing: no row is corrupt. */

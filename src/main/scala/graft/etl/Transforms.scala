@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import scala.util.{Failure, Success, Try}
 
 /** Row-level transform operators (reference §2.4).
@@ -264,18 +264,34 @@ object Transforms {
       .drop("__gsp", "__gso")
   }
 
+  /** Runs `write` over `df` with `metrics` attached by `Dataset.observe`,
+    * and returns what `write` returned with the observed row, read by
+    * Spark's blocking `Observation.get` — the metrics ride the write's own
+    * action: one pass, no cache, no extra job, and no deadline, so a slow
+    * listener bus delays the result but never changes it. `write` runs its
+    * actions before it returns. The row is empty when no query `write` ran
+    * read `df`: the optimizer removed the observed plan (it sits under a
+    * `filter("1 = 0")` or a `limit(0)`), or the frame was not used.
+    */
+  def observed[T](df: DataFrame, metrics: Seq[Column])(write: DataFrame => T): (T, Map[String, Any]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val watched = df.observe(obs, metrics.head, metrics.tail: _*)
+    val out = write(watched)
+    // Spark completes an observation when a query holding it ends, in the
+    // order the queries ran, and without metrics when the optimizer removed
+    // it: this job-free query completes `obs` empty unless a query of
+    // `write` completed it first
+    if (!obs.future.isCompleted) watched.limit(0).collect()
+    (out, obs.get)
+  }
+
   /** T5 `Pipeline`: source→sink copy with stats
-    * (`etl-core/src/task/pipeline.rs:5-50`).
-    *
-    * Row count comes from the Observation API — metrics piggyback on the
-    * write action itself, so the copy is a SINGLE pass with no cache and no
-    * extra count job (the reference's `DataOutputStats` for free).
+    * (`etl-core/src/task/pipeline.rs:5-50`): the rows `write` wrote, as an
+    * [[observed]] `count(lit(1))` (the reference's `DataOutputStats`).
     * `write` must trigger exactly one action over the frame it receives.
     */
   def copyPipeline(df: DataFrame, write: DataFrame => Unit): Long = {
     import org.apache.spark.sql.functions.{count, lit}
-    val obs = org.apache.spark.sql.Observation()
-    write(df.observe(obs, count(lit(1)).as("rows")))
-    obs.get("rows").asInstanceOf[Long]
+    observed(df, Seq(count(lit(1)).as("rows")))(write)._2.getOrElse("rows", 0L).asInstanceOf[Long]
   }
 }

@@ -1,30 +1,8 @@
 package graft.jobs
 
-import graft.etl.{ErrorTolerant, TextSource}
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation}
-import org.apache.spark.sql.expressions.Aggregator
+import graft.etl.{ErrorTolerant, Transforms}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-/** Per-file ok/err counting as an aggregate function, so it can ride a sink
-  * write inside `Dataset.observe` — one pass, no cache, exactly-once metric
-  * semantics (observed metrics ignore retried tasks). Output map is bounded
-  * by the number of distinct input files, keyed "O|uri" / "E|uri".
-  */
-private[jobs] class PerFileCounter
-    extends Aggregator[(String, Boolean), Map[String, Long], Map[String, Long]] {
-  def zero: Map[String, Long] = Map.empty
-  def reduce(m: Map[String, Long], row: (String, Boolean)): Map[String, Long] = {
-    val k = (if (row._2) "E|" else "O|") + row._1
-    m.updated(k, m.getOrElse(k, 0L) + 1L)
-  }
-  def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
-    b.foldLeft(a) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) }
-  def finish(r: Map[String, Long]): Map[String, Long] = r
-  def bufferEncoder: Encoder[Map[String, Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-  def outputEncoder: Encoder[Map[String, Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-}
 
 /** Error raised when a job's (or the manager's) error budget is exceeded —
   * the reference's `TooManyErrors` broadcast
@@ -56,7 +34,6 @@ final class JobRunner(
   private var state: JobState =
     store.load(doc).map(JobState.fromJson).getOrElse(JobState.empty(id, name))
   private var errorsSoFar: Long = 0
-  manager.foreach(_.register(this))
 
   def currentState: JobState = state
   private def save(): Unit = store.write(doc, JobState.toJson(state))
@@ -91,17 +68,10 @@ final class JobRunner(
     * (distributed, incl. per-input-file counts via lineage when present),
     * enforces the error budget, runs `write` over the good rows, records
     * output stats — `run_stream` (`job.rs:318-412`). Re-running a Complete
-    * step skips the whole action (`job.rs:331-338`).
+    * step skips the whole action (`job.rs:331-338`), and the by-name
+    * `decoded` is then never forced (no schema inference, no file listing).
     *
     * Returns true if the step ran, false if skipped.
-    */
-  def runDecodedStream(step: String, decoded: ErrorTolerant.Decoded,
-      sinkName: String, write: DataFrame => Long,
-      stopOnError: Boolean = true): Boolean =
-    runDecodedStreamLazy(step, decoded, sinkName, write, stopOnError)
-
-  /** Same, with a by-name decoded source: nothing is forced (no schema
-    * inference, no file listing) when the step skips as already Complete.
     */
   def runDecodedStreamLazy(step: String, decoded: => ErrorTolerant.Decoded,
       sinkName: String, write: DataFrame => Long,
@@ -119,69 +89,22 @@ final class JobRunner(
     save()
     var stepErrors = 0L
     val (total, written, perFile) = try {
-      // Single pass, no cache: ok/err totals (and per-file counts when the
-      // frame carries TextSource lineage) ride the sink write itself
-      // as observed metrics — the pattern Transforms.copyPipeline uses. At
-      // warehouse scale this is one scan of the input and zero cluster-wide
-      // caching; the corrupt-record column is never projected on its own,
-      // so file-backed permissive reads stay legal uncached.
+      // Single pass, no cache: the decode metrics (ok/err totals, per-file
+      // counts under lineage) ride the sink write itself as observed
+      // metrics, one scan of the input.
       val dec = decoded
-      val all = dec.all
-      val hasLineage = TextSource.hasLineage(all)
-      val corrupt = col(ErrorTolerant.CorruptCol)
-      val obs = Observation(s"graft.$id.$name.$step")
-      // over a parsed source, the xxhash64-over-all-columns metric pins
-      // every column into the scan's required schema (count(struct(..))
-      // would be folded away): corrupt-record detection is only defined
-      // over a full-row parse — a pruned parse marks fewer rows corrupt —
-      // and it keeps count()-style sinks legal over uncached permissive
-      // reads (QUERY_ONLY_CORRUPT_RECORD_COLUMN). A source that parses
-      // nothing has a literal corrupt column, so its scan stays pruned.
-      val pin =
-        if (dec.parsed) Seq(max(xxhash64(all.columns.map(col): _*)).as("_schema_pin"))
-        else Nil
-      val baseMetrics = Seq(
-        sum(when(corrupt.isNull, 1L).otherwise(0L)).as("ok"),
-        sum(when(corrupt.isNotNull, 1L).otherwise(0L)).as("err")) ++ pin
-      val perFileUdaf = udaf(new PerFileCounter)
-      val metrics =
-        if (hasLineage)
-          // key = full source URI: basenames collide across directories
-          baseMetrics :+ perFileUdaf(col(TextSource.SourceCol), corrupt.isNotNull).as("per_file")
-        else baseMetrics
-      val observed = all.observe(obs, metrics.head, metrics.tail: _*)
-      val written = write(ErrorTolerant.Decoded(observed).good)
-      // `write` is contractually a Spark action over the frame; metrics are
-      // published by an async listener just after the action completes, so
-      // wait briefly rather than block forever if the contract was broken
-      val m: Map[String, Any] =
-        scala.util.Try(scala.concurrent.Await.result(
-          obs.future, scala.concurrent.duration.Duration(30, "s")))
-          .map(row => row.schema.fieldNames.zip(row.toSeq).toMap)
-          .getOrElse(Map.empty)
-      val (ok, err, perFile) =
-        if (m.nonEmpty) {
-          val pf = if (hasLineage)
-            m("per_file").asInstanceOf[Map[String, Long]]
-              .groupBy { case (k, _) => k.drop(2) }
-              .map { case (f, kv) => f -> FileStatus(
-                kv.collect { case (k, v) if k.startsWith("O|") => v }.sum,
-                kv.collect { case (k, v) if k.startsWith("E|") => v }.sum) }
-          else Map.empty[String, FileStatus]
-          (Option(m("ok")).fold(0L)(_.asInstanceOf[Long]),
-            Option(m("err")).fold(0L)(_.asInstanceOf[Long]), pf)
-        } else {
-          // fallback: `write` ran no action on the frame (nothing was
-          // observed) — count in a separate pass
-          val c = dec.counts
-          (c._1, c._2, Map.empty[String, FileStatus])
-        }
+      val (written, observed) = Transforms.observed(dec.all, dec.metrics)(
+        df => write(dec.copy(all = df).good))
+      // The observation completes empty only when the write never read the
+      // source (its transforms filter everything, e.g. `1 = 0`, or replace
+      // the frame): count the source apart.
+      val (ok, err, perFile) = dec.tally(if (observed.nonEmpty) observed else dec.measure())
       stepErrors = err
       // budget check happens after the write's action completes (counts are
       // discovered *while* writing — same as the reference's incremental
       // stream, where output produced before the budget trips exists)
       checkBudgets(step, math.max(0L, err - previouslyCharged))
-      (ok + err, written, perFile)
+      (ok + err, written, perFile.map { case (f, (o, e)) => f -> FileStatus(o, e) })
     } catch {
       case e: Throwable =>
         state = state.copy(
@@ -202,13 +125,6 @@ final class JobRunner(
     save()
     true
   }
-
-  /** Plain stream step: any DataFrame, no decode-error accounting. The
-    * by-name parameter is only forced if the step actually runs.
-    */
-  def runStream(step: String, df: => DataFrame, sinkName: String,
-      write: DataFrame => Long): Boolean =
-    runDecodedStreamLazy(step, ErrorTolerant.unparsed(df), sinkName, write)
 
   /** Durable side-effect command step — `run_cmd` (`job.rs:606-643`) with
     * `stop_on_error` semantics (`state.rs:190-206`): a failing command marks
@@ -298,7 +214,6 @@ final class JobRunner(
           failures.headOption.map { case (n, e) => s"$n: ${e.getMessage}" })))
     }
     save()
-    manager.foreach(_.jobCompleted(this))
     failures.headOption.foreach { case (n, e) =>
       throw new IllegalStateException(s"detached output '$n' failed", e)
     }
@@ -308,20 +223,17 @@ final class JobRunner(
 
 /** Cross-job coordinator — the reference `JobManager`
   * (`etl-job/src/job_manager.rs:102-337`): aggregates error counts across
-  * all registered runners and trips a global `TooManyErrors` once the shared
-  * budget is exceeded.
+  * the runners that share it and trips a global `TooManyErrors` once the
+  * shared budget is exceeded.
   */
 final class JobManager(globalMaxErrors: Long = 1000) {
   private val totalErrors = new java.util.concurrent.atomic.AtomicLong()
-  private val jobs = scala.collection.mutable.ArrayBuffer.empty[JobRunner]
 
-  def register(j: JobRunner): Unit = synchronized { jobs += j }
   def addErrors(n: Long): Unit = totalErrors.addAndGet(n)
   def errorCount: Long = totalErrors.get()
   def checkGlobalBudget(): Unit =
     if (totalErrors.get() > globalMaxErrors)
       throw TooManyErrors("GLOBAL", totalErrors.get(), globalMaxErrors)
-  def jobCompleted(j: JobRunner): Unit = ()
 }
 
 /** Resume-at-index (`job.rs:484-511`): skip records already processed by a

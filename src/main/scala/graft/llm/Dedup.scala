@@ -29,51 +29,7 @@ object Dedup {
     df.groupBy(md5(col(contentCol)).as("content_hash"))
       .agg(min(col(idCol)).as("survivor_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature over a shingle-array column: `numHashes` independent
-    * permutation-min approximations.
-    *
-    * Each shingle is hashed ONCE (xxhash64), then the `numHashes` variants
-    * are derived by universal hashing `(2h+1)·x + 7919·h  mod P` in a
-    * collision-safe modular space — integer-only inner loop, ~100× cheaper
-    * than re-hashing strings per (hash × shingle), and products stay far
-    * below 2^63 so ANSI overflow checking never fires. Hash choice only
-    * affects LSH recall, never verified outputs.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    val P = 1000003L
-    val base = transform(shingles, s => pmod(xxhash64(s), lit(P)))
-    transform(sequence(lit(0), lit(numHashes - 1)), h =>
-      array_min(transform(base, x => pmod((h * 2 + 1) * x + h * lit(7919L), lit(P)))))
-  }
-
   private val P = 1000003L
-
-  /** Scala-kernel minhash signature (same universal-hash family as
-    * `minhashSignature`, murmur3 base hash): the hot inner loop (hashes ×
-    * shingles) runs as JIT-compiled primitive arithmetic inside
-    * mapPartitions instead of interpreted Catalyst higher-order expressions
-    * (HOFs have no codegen) — ~100× per-row. Hash choice only affects LSH
-    * recall, never verified outputs.
-    */
-  private def sigScala(shingles: Seq[String], numHashes: Int): Array[Long] = {
-    val base = shingles.distinct.map(s =>
-      (scala.util.hashing.MurmurHash3.stringHash(s).toLong & 0xffffffffL) % P).toArray
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var h = 0
-    while (h < numHashes) {
-      val a = 2L * h + 1; val b = 7919L * h
-      var m = Long.MaxValue
-      var i = 0
-      while (i < base.length) {
-        val v = (a * base(i) + b) % P
-        if (v < m) m = v
-        i += 1
-      }
-      sig(h) = m
-      h += 1
-    }
-    sig
-  }
 
   /** Ensure enough partitions for a CPU-heavy map stage: small local files
     * arrive as one split; at warehouse scale the input is already split and
@@ -174,61 +130,6 @@ object Dedup {
     else // cross block: full ca × cb
       ca.iterator.flatMap(x => cb.iterator.map(y => (x, y)))
 
-  /** LSH candidate pairs: band the signature, bucket-join within bands.
-    * Returns distinct (id_a, id_b) with id_a < id_b.
-    *
-    * `df` must carry (idCol: numeric long, shinglesCol: array<string>).
-    * Signature + band buckets are computed in one JIT-compiled pass; the
-    * bucket equi-join shuffles only (id, band, bucket) triples.
-    */
-  def lshCandidates(df: DataFrame, idCol: String, shinglesCol: String,
-      numHashes: Int, bands: Int, maxBucketSize: Int = 10000): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val spark = df.sparkSession
-    import spark.implicits._
-    val banded = ensureParallelism(
-      df.select(col(idCol).cast("long"), col(shinglesCol)))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, shingles) =>
-          val sig = sigScala(shingles, numHashes)
-          (0 until bands).iterator.map { b =>
-            var bh = 1125899906842597L
-            var i = b * rows
-            while (i < (b + 1) * rows) { bh = bh * 31 + sig(i); i += 1 }
-            (id, b, bh)
-          }
-        }
-      }.toDF("id", "band", "bucket")
-    pairsWithinBuckets(banded, Seq("band", "bucket"), "id", maxBucketSize)
-  }
-
-  /** Exact Jaccard over (id_a, id_b, set_a, set_b) rows, JIT-compiled
-    * (hash-set intersection in Scala beats interpreted `array_intersect`
-    * ~50× on 100+-element sets). Same integer counts → same double
-    * division → oracle-identical values.
-    */
-  private def jaccardOfPairs(pairs: DataFrame, threshold: Double): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    pairs
-      .select(col("id_a").cast("long"), col("id_b").cast("long"),
-        col("set_a"), col("set_b"))
-      .as[(Long, Long, Seq[String], Seq[String])]
-      .mapPartitions(_.map { case (a, b, sa, sb) =>
-        val s = sa.toSet
-        var inter = 0
-        sb.foreach(x => if (s.contains(x)) inter += 1)
-        val union = sa.size + sb.size - inter
-        // two empty sets → 0/0; report 0.0, not NaN (Spark orders NaN above
-        // every double, so NaN would silently pass a >= threshold filter)
-        (a, b, if (union == 0) 0.0 else inter.toDouble / union)
-      })
-      .toDF("id_a", "id_b", "jac")
-      .filter(col("jac") >= threshold)
-  }
-
   /** Exact Jaccard over hashed-set pair rows (id_a, id_b, hs_a, hs_b) where
     * the sets are SORTED long arrays: linear merge intersection, no string
     * deserialization in the pair loop. Hashed counts equal string-set counts
@@ -253,19 +154,6 @@ object Dedup {
       })
       .toDF("id_a", "id_b", "jac")
       .filter(col("jac") >= threshold)
-  }
-
-  /** Exact Jaccard verification of candidate pairs against distinct shingle
-    * sets. Returns (id_a, id_b, jaccard) for pairs meeting the threshold.
-    */
-  def jaccardVerify(candidates: DataFrame, df: DataFrame, idCol: String,
-      shinglesCol: String, threshold: Double): DataFrame = {
-    val sets = df.select(col(idCol).as("id"),
-      array_distinct(col(shinglesCol)).as("set"))
-    jaccardOfPairs(candidates
-      .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("set").as("set_b")), "id_b"),
-      threshold)
   }
 
   /** Distinct word n-gram shingle sets, computed in one JIT-compiled pass
@@ -594,9 +482,11 @@ object Dedup {
       .toDF("id", "hs")
   }
 
-  /** Minhash signature from a hashed shingle set (same universal-hash family
-    * as `sigScala`; base values are the 64-bit shingle hashes folded into
-    * the modular space). JIT-compiled primitive loop.
+  /** Minhash signature from a hashed shingle set: `numHashes` universal-hash
+    * permutation minima `(2h+1)·x + 7919·h  mod P` over the 64-bit shingle
+    * hashes folded into the modular space (products stay far below 2^63).
+    * JIT-compiled primitive loop; hash choice only affects LSH recall,
+    * never verified outputs.
     */
   private def sigFromHashes(hs: Array[Long], numHashes: Int): Array[Long] = {
     val base = new Array[Long](hs.length)

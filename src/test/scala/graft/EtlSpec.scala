@@ -22,6 +22,39 @@ class EtlSpec extends SparkSpec {
     assert(dec.corrupt.as[String].collect().forall(_.contains("malformed")))
   }
 
+  test("Decoded.counts over a file-backed permissive read caches nothing") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val file = java.nio.file.Files.createTempDirectory("graft_counts").resolve("in.ndjson")
+    java.nio.file.Files.write(file, Fixtures.malformedJsonStream.mkString("\n").getBytes)
+    val dec = ErrorTolerant.jsonFiles(spark, Seq(file.toString),
+      StructType.fromDDL("name STRING, todo ARRAY<STRING>, id STRING"))
+    // every query run until a marker query's callback arrives
+    val marker = "graft_marker_" + java.util.UUID.randomUUID().toString.take(8)
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    val counts = try {
+      val c = dec.counts
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(isMarker), "marker query never reached the listener")
+      c
+    } finally spark.listenerManager.unregister(listener)
+    assert(counts === ((3L, 2L)))
+    val queries = seen.asScala.filterNot(isMarker).toSeq
+    assert(queries.nonEmpty)
+    assert(queries.forall(_.withCachedData.collectFirst { case r: InMemoryRelation => r }.isEmpty))
+    assert(dec.all.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("D2: ndjson10 strict-field parity 9 ok / 1 err (decoder_fs.rs:70-72)") {
     val dec = ErrorTolerant.json(spark, spark.createDataset(Fixtures.ndjson10), iw)
     // the renamed-key line parses as JSON but misses the required field

@@ -22,7 +22,7 @@ class JobSpec extends SparkSpec {
   test("run_stream: 3 ok / 2 err recorded, rerun skips (simple-pipeline.rs:61-63)") {
     val store = new InMemoryStore
     val r1 = new JobRunner("j1", "simple", store)
-    val ran = r1.runDecodedStream("xform", malformedDecoded(), "mock", _.count())
+    val ran = r1.runDecodedStreamLazy("xform", malformedDecoded(), "mock", _.count())
     assert(ran)
     val st = r1.currentState.streams("xform")
     assert(st.totalLinesScanned === 5 && st.numErrors === 2)
@@ -30,7 +30,7 @@ class JobSpec extends SparkSpec {
     assert(st.status === JobState.Complete && st.stepIndex === 0)
     // a fresh runner over the same store must skip the completed step
     val r2 = new JobRunner("j1", "simple", store)
-    assert(!r2.runDecodedStream("xform", malformedDecoded(), "mock",
+    assert(!r2.runDecodedStreamLazy("xform", malformedDecoded(), "mock",
       _ => fail("step must not re-run")))
   }
 
@@ -41,7 +41,7 @@ class JobSpec extends SparkSpec {
       (1 to 14).map(i => s"$i this is a malformed json")
     val dec = ErrorTolerant.json(spark, spark.createDataset(manyBad), tsd)
     intercept[TooManyErrors] {
-      r.runDecodedStream("xform", dec, "mock", _.count())
+      r.runDecodedStreamLazy("xform", dec, "mock", _.count())
     }
     assert(r.currentState.streams("xform").status === JobState.Error)
     assert(r.currentState.fatalError.isDefined)
@@ -58,13 +58,72 @@ class JobSpec extends SparkSpec {
       ErrorTolerant.jsonFiles(spark,
         Seq(s"$dir/bad.ndjson", s"$dir/good.ndjson"), tsd).all))
     val r = new JobRunner("j3", "files", new InMemoryStore)
-    r.runDecodedStream("decode", dec, "noop", _.count())
+    r.runDecodedStreamLazy("decode", dec, "noop", _.count())
     val files = r.currentState.streams("decode").files
     def byName(n: String) = files.collectFirst {
       case (k, v) if k.endsWith(n) => v
     }.get
     assert(byName("bad.ndjson") === FileStatus(3, 2))
     assert(byName("good.ndjson") === FileStatus(2, 0))
+  }
+
+  /** A one-step declared job: the malformed fixture as a `json_files`
+    * source, `transforms`, then `sink`. Returns the job's config.
+    */
+  private def fixtureJob(dir: java.nio.file.Path, transforms: String, sink: String) = {
+    java.nio.file.Files.write(dir.resolve("in.ndjson"),
+      Fixtures.malformedJsonStream.mkString("\n").getBytes)
+    graft.config.PipelineConfig.parse(
+      s"""{ "id": "fixture", "name": "${dir.getFileName}", "steps": [
+         |  { "step": "s", "kind": "stream",
+         |    "source": { "type": "json_files", "paths": ["$dir/in.ndjson"],
+         |                "schema": "name STRING, todo ARRAY<STRING>, id STRING" },
+         |    "transforms": [$transforms], "sink": $sink } ] }""".stripMargin)
+  }
+
+  test("a step whose write reads no source row still counts its source") {
+    // the optimizer removes the observed source from the write's plan, so
+    // its observation completes without metrics and the runner counts the
+    // source on its own
+    val dir = java.nio.file.Files.createTempDirectory("graft_job_none")
+    val conf = fixtureJob(dir, """{ "op": "filter", "expr": "1 = 0" }""",
+      s"""{ "type": "parquet", "path": "$dir/out" }""")
+    val st = graft.config.PipelineConfig.run(spark, conf, new InMemoryStore).streams("s")
+    assert(st.status === JobState.Complete)
+    assert((st.totalLinesScanned, st.numErrors) === ((5L, 2L)))
+    assert(st.outputs.map(_.linesWritten) === List(0L))
+    assert(spark.read.parquet(s"$dir/out").count() === 0)
+    // a write that never uses the frame it is given
+    val r = new JobRunner("none", "unused", new InMemoryStore)
+    r.runDecodedStreamLazy("s", malformedDecoded(), "mock", _ => spark.range(7).count())
+    val unused = r.currentState.streams("s")
+    assert((unused.totalLinesScanned, unused.numErrors) === ((5L, 2L)))
+    assert(unused.outputs === List(OutputStats("mock", 7)))
+  }
+
+  test("a parquet-sink step outwaits a listener queue held past 30 s, writing its rows once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft_job_held")
+    val conf = fixtureJob(dir, "",
+      s"""{ "type": "parquet", "path": "$dir/out", "mode": "append" }""")
+    // holds the shared listener queue from the write job's start, so the
+    // write's observed metrics arrive 36 s later
+    val hold = new SparkListener {
+      private val held = new java.util.concurrent.atomic.AtomicBoolean(false)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (held.compareAndSet(false, true)) Thread.sleep(36000)
+    }
+    val store = new InMemoryStore
+    spark.sparkContext.addSparkListener(hold)
+    val st = try graft.config.PipelineConfig.run(spark, conf, store).streams("s")
+      finally spark.sparkContext.removeSparkListener(hold)
+    assert(st.status === JobState.Complete)
+    assert(st.finishedMs.get - st.startedMs >= 30000)
+    assert((st.totalLinesScanned, st.numErrors) === ((5L, 2L)))
+    assert(st.outputs.map(_.linesWritten) === List(3L))
+    // a re-run skips the committed step, so the append's rows exist once
+    graft.config.PipelineConfig.run(spark, conf, store)
+    assert(spark.read.parquet(s"$dir/out").count() === 3)
   }
 
   test("the schema pin holds a parsed source's full row and spares sources that parse nothing") {
@@ -87,7 +146,7 @@ class JobSpec extends SparkSpec {
     rows.foreach { case (src, scanned, lines, errors) =>
       var read = Seq.empty[String]
       val r = new JobRunner("jpin", src.`type`, new InMemoryStore)
-      r.runDecodedStream("s", buildSource(spark, src), "noop", { df =>
+      r.runDecodedStreamLazy("s", buildSource(spark, src), "noop", { df =>
         val ids = df.select("id")
         read = ids.queryExecution.sparkPlan.collect {
           case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq
@@ -164,9 +223,9 @@ class JobSpec extends SparkSpec {
     val doc = JobState.docName("crash", "three")
     def runJob(store: SimpleStore, ran: ArrayBuffer[String]): JobState = {
       val r = new JobRunner("crash", "three", store)
-      r.runDecodedStream("decode", malformedDecoded(), "mock", { df => ran += "decode"; df.count() })
+      r.runDecodedStreamLazy("decode", malformedDecoded(), "mock", { df => ran += "decode"; df.count() })
       r.runCmd("ddl") { ran += "ddl" }
-      r.runDecodedStream("load", malformedDecoded(), "mock", { df => ran += "load"; df.count() })
+      r.runDecodedStreamLazy("load", malformedDecoded(), "mock", { df => ran += "load"; df.count() })
       r.complete()
     }
     def completed(s: JobState) = steps.filter(st => s.isStreamComplete(st) || s.isCommandComplete(st))
@@ -236,9 +295,9 @@ class JobSpec extends SparkSpec {
     // a stream step saves InProgress, then Complete
     val streamStore = new FlakyStore(2)
     intercept[java.io.IOException](new JobRunner("flaky", "stream", streamStore)
-      .runDecodedStream("s", malformedDecoded(), "mock", _.count()))
+      .runDecodedStreamLazy("s", malformedDecoded(), "mock", _.count()))
     val r2 = new JobRunner("flaky", "stream", streamStore)
-    assert(r2.runDecodedStream("s", malformedDecoded(), "mock", _.count()))
+    assert(r2.runDecodedStreamLazy("s", malformedDecoded(), "mock", _.count()))
     val st = r2.currentState.streams("s")
     assert(st.status === JobState.Complete && st.totalLinesScanned === 5 && st.numErrors === 2)
     assert(r2.currentState.fatalError.isEmpty)
@@ -275,10 +334,10 @@ class JobSpec extends SparkSpec {
     val store = new InMemoryStore
     val r1 = new JobRunner("jA", "p", store, JobRunnerConfig(10), Some(mgr))
     val r2 = new JobRunner("jB", "p", store, JobRunnerConfig(10), Some(mgr))
-    r1.runDecodedStream("s", malformedDecoded(), "mock", _.count()) // +2 errors
+    r1.runDecodedStreamLazy("s", malformedDecoded(), "mock", _.count()) // +2 errors
     assert(mgr.errorCount === 2)
     intercept[TooManyErrors] { // +2 more crosses the global budget of 3
-      r2.runDecodedStream("s", malformedDecoded(), "mock", _.count())
+      r2.runDecodedStreamLazy("s", malformedDecoded(), "mock", _.count())
     }
     assert(r1.currentState.streams("s").status === JobState.Complete)
     assert(r2.currentState.streams("s").status === JobState.Error)
@@ -303,7 +362,7 @@ class JobSpec extends SparkSpec {
   test("run report exposes step history as a queryable DataFrame (O8 parity)") {
     val r = new JobRunner("j7", "report", new InMemoryStore)
     r.runCmd("ddl")(())
-    r.runDecodedStream("decode", malformedDecoded(), "mock", _.count())
+    r.runDecodedStreamLazy("decode", malformedDecoded(), "mock", _.count())
     val report = r.runReport(spark)
     assert(report.count() === 2)
     val decode = report.filter(org.apache.spark.sql.functions.col("step") === "decode").head()

@@ -113,10 +113,36 @@ class PathReadSpec extends SparkSpec {
   }
 
   test("a missing path raises Spark's PATH_NOT_FOUND") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
     val missing = tmpPath("graft-missing")
     def condition(read: => Unit): String = intercept[AnalysisException](read).getCondition
-    assert(condition(spark.sql(s"SELECT * FROM parquet.`$missing`")) === "PATH_NOT_FOUND")
-    assert(condition(spark.sql(s"SELECT * FROM orc.`$missing`")) === "PATH_NOT_FOUND")
+    // Spark's file source warns once each time it looks up a missing path
+    val lookups = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new AbstractAppender("graft-missing-lookups", null, null, true,
+        Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("Assume no metadata directory") && msg.contains(missing))
+          lookups.incrementAndGet()
+      }
+    }
+    val name = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext].getLogger(name)
+    val level = logger.getLevel
+    Configurator.setLevel(name, Level.WARN)
+    counter.start()
+    logger.addAppender(counter)
+    try Seq("parquet", "orc").foreach { format =>
+      lookups.set(0)
+      assert(condition(spark.sql(s"SELECT * FROM $format.`$missing`")) === "PATH_NOT_FOUND")
+      assert(lookups.get === 1, format)
+    } finally {
+      logger.removeAppender(counter)
+      Configurator.setLevel(name, level)
+    }
   }
 
   test("orc paths, subqueries and CTE bodies read through the cache") {
